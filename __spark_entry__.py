@@ -698,7 +698,8 @@ def q_assoc_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_assoc_top5_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same result as assoc_top5 via the salted two-phase top-5 merge
     (skew_safe=True) — no per-antecedent window; plan-asserted window-free
-    in tests/test_skew.py."""
+    in tests/test_skew.py.  ``max_local_edges=0`` keeps the tail on the
+    distributed salted merge instead of the driver-local tail."""
     res = graph_association_rules(
         _brand_tx(spark, sf_dir),
         min_support=_ASSOC_MIN_SUPPORT,
@@ -706,6 +707,7 @@ def q_assoc_top5_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         weighted=False,
         with_patterns=False,
         skew_safe=True,
+        max_local_edges=0,
     )
     ex = res.select(
         "item", F.posexplode("consequents").alias("pos", "consequent")

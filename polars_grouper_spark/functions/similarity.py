@@ -174,7 +174,7 @@ def _bucket_col(
     if dim is None:
         dim = _vec_dim(df, vec_col)
     planes = _deterministic_planes(n_planes, dim, seed)
-    v = f"`{vec_col}`"
+    v = "`" + vec_col.replace("`", "``") + "`"  # quoted identifier
     terms = ["CAST(0 AS BIGINT)"]
     for p, plane in enumerate(planes):
         arr = ", ".join(f"CAST({x!r} AS DOUBLE)" for x in plane)

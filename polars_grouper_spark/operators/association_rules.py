@@ -26,9 +26,8 @@ observable quirks, all replicated:
   visiting items in first-appearance order (``:114-135``).  Equivalent
   closed form (provable): an item's pattern root is the minimum-id item
   that can *reach* it; patterns are numbered 1..k by root id ascending.
-  Computed here via min-label propagation along reversed edges — a small
-  driver-side loop over the items-level graph (|items| rows, tiny next to
-  the row-level data).
+  Computed by one DFS pass over the item graph on the driver, or by
+  min-label propagation along the edges when the graph is over the guard.
 - Output rows: valid items in first-appearance order; ``consequents`` /
   ``confidence_scores`` are the top-5 associations by confidence
   descending.  The reference's tie order within equal confidences is
@@ -38,9 +37,19 @@ observable quirks, all replicated:
 Scale notes: the heavy steps are the transaction self-join (shuffle on
 transaction_id — AQE skew-join handles hot transactions; oversized
 transactions are filtered *before* the join, which also caps the quadratic
-blowup per transaction at max_itemset_size²) and the per-antecedent
-aggregations (map-side combinable).  The pattern loop runs on the distinct
-item-pair graph, which is bounded by |valid items|², not by data volume.
+blowup per transaction at max_itemset_size²) and the collapse of its pairs
+into (antecedent, consequent, confidence) groups (map-side combinable).
+Both stay distributed.  Everything after the collapse is item-scale —
+bounded by |valid items|², not by data volume — so the group table goes
+through the tier gate (``plans.tiering.tier_gate``): one eager checkpoint
+whose observed row count is compared with ``max_local_edges`` (default 2M
+rows, resolved through ``spark.polars_grouper.maxLocalEdges``).  Under the
+guard, the group and valid-item tables come to the driver in one collect
+and top-5, lift, patterns and row order are computed there
+(``_local_tail``), returned as one Arrow ``createDataFrame``.  Over the
+guard the distributed tail reuses the checkpoint (the pattern edges get
+the same gate); ``max_local_edges=0`` or the conf at ``"0"`` keeps the
+whole operator distributed with no driver collect.
 """
 
 from __future__ import annotations
@@ -48,15 +57,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_grouper_spark.plans.iteration import (
+    fingerprint,
+    observed_count,
+    truncate_lineage,
+)
 from polars_grouper_spark.plans.parallelism import local_result
-
-from polars_grouper_spark.plans.iteration import fingerprint, truncate_lineage
 from polars_grouper_spark.plans.skew import salted_agg
+from polars_grouper_spark.plans.tiering import resolve_max_local_edges, tier_gate
 
 _PATTERN_MAX_ROUNDS = 64
 
-
-_PATTERN_DRIVER_MAX_EDGES = 200_000
+_OUT_SCHEMA = (
+    "item string, support double, lift_score double, pattern long, "
+    "consequents array<string>, confidence_scores array<double>"
+)
 
 
 def _pattern_labels_local(rows) -> list[tuple[int, int]]:
@@ -86,7 +101,7 @@ def _pattern_labels_local(rows) -> list[tuple[int, int]]:
     return sorted(label.items())
 
 
-def _pattern_labels(assoc_edges: DataFrame) -> DataFrame:
+def _pattern_labels(assoc_edges: DataFrame, guard: int) -> DataFrame:
     """Min-reachable-root labels over the directed item graph.
 
     assoc_edges: (a long, c long) distinct directed edges (antecedent id →
@@ -94,21 +109,17 @@ def _pattern_labels(assoc_edges: DataFrame) -> DataFrame:
     reaches iid (including itself).
 
     The item graph is metadata-scale by construction (bounded by
-    |valid items|², independent of row volume), so when it fits under
-    ``_PATTERN_DRIVER_MAX_EDGES`` it is collected and solved exactly on the
-    driver in one pass instead of running a multi-job distributed fixpoint.
-    Larger item vocabularies fall back to the min-label propagation loop.
+    |valid items|², independent of row volume), so when it fits under the
+    call's resolved ``guard`` it is collected through the tier gate and
+    solved exactly on the driver in one pass instead of running a
+    multi-job distributed fixpoint.  Larger item vocabularies (or
+    ``guard=0``) fall back to the min-label propagation loop, which reuses
+    the gate's checkpoint.
     """
     spark = assoc_edges.sparkSession
-    # Probe via checkpoint + count + collect (r9-opt): ``limit(K+1)``
-    # goes through executeTake, which under AQE executes partitions
-    # incrementally through the driver (the bpe probe measured it 3x
-    # slower than checkpoint+count); the checkpoint is also what the
-    # distributed fallback would want materialized anyway.
-    assoc_edges = truncate_lineage(assoc_edges)
-    if assoc_edges.count() <= _PATTERN_DRIVER_MAX_EDGES:
-        sample = assoc_edges.collect()
-        labeled = _pattern_labels_local([(r["a"], r["c"]) for r in sample])
+    assoc_edges, local = tier_gate(assoc_edges, guard)
+    if local is not None:
+        labeled = _pattern_labels_local(zip(local["a"].tolist(), local["c"].tolist()))
         return local_result(spark, labeled, "iid long, root long")
     nodes = assoc_edges.select(F.col("a").alias("iid")).union(
         assoc_edges.select(F.col("c").alias("iid"))
@@ -132,6 +143,123 @@ def _pattern_labels(assoc_edges: DataFrame) -> DataFrame:
     return labels
 
 
+def _local_tail_input(grouped: DataFrame, valid_items: DataFrame) -> DataFrame:
+    """The one frame the driver tail collects, as ``(a, c, v, n, item)``:
+    each pair group is ``(a_iid, c_iid, confidence, cnt, NULL)`` and each
+    valid item is ``(iid, iid, support_count, 0, item)`` — ``n = 0`` marks
+    an item row (a group always holds at least one instance).  Consequent
+    names are resolved from the item rows on the driver, so the
+    |items|²-scale group rows carry no strings, and no numeric column is
+    ever null, so pandas keeps int64/float64 with or without Arrow."""
+    groups = grouped.select(
+        F.col("a_iid").alias("a"),
+        F.col("c_iid").alias("c"),
+        F.col("confidence").alias("v"),
+        F.col("cnt").alias("n"),
+        F.lit(None).cast("string").alias("item"),
+    )
+    items = valid_items.select(
+        F.col("iid").alias("a"),
+        F.col("iid").alias("c"),
+        F.col("support_count").alias("v"),
+        F.lit(0).cast("long").alias("n"),
+        "item",
+    )
+    return groups.union(items)
+
+
+def _local_tail(spark, local, *, weighted: bool, with_patterns: bool) -> DataFrame:
+    """The item-scale tail on the driver — the distributed tail's rows.
+
+    ``local`` is the collected ``_local_tail_input``.  Same definitions
+    as the distributed paths:
+
+    - top-5 instances: groups ordered by (antecedent, confidence desc,
+      consequent name asc), each expanded to ``min(cnt, remaining)``
+      copies until 5 instances (duplicates kept — the reference's
+      no-dedup accumulation);
+    - lift: instance count × confidence unweighted (every pair of an
+      antecedent carries the same confidence; one multiply, as in the
+      distributed paths, so bit-identical), Σ confidence × cnt weighted;
+    - pattern: min-reachable root (``_pattern_labels_local``) numbered
+      densely by root id, or 0 without patterns;
+    - rows in iid (first-appearance) order.
+
+    The result goes back through ONE Arrow ``createDataFrame`` (no
+    Python worker on later actions).
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    a = local["a"].to_numpy(dtype=np.int64)
+    c = local["c"].to_numpy(dtype=np.int64)
+    v = local["v"].to_numpy(dtype=np.float64)
+    n = local["n"].to_numpy(dtype=np.int64)
+    is_item = n == 0
+
+    order = np.argsort(a[is_item], kind="stable")
+    iid = a[is_item][order]
+    names = local["item"].to_numpy(dtype=object)[is_item][order]
+    support = v[is_item][order]
+    n_items = len(iid)
+    name_rank = np.empty(n_items, dtype=np.int64)
+    name_rank[np.argsort(names, kind="stable")] = np.arange(n_items)
+
+    # Groups as item positions (positions preserve iid order), sorted
+    # antecedent-major by (confidence desc, consequent name asc).
+    ga = np.searchsorted(iid, a[~is_item])
+    gc = np.searchsorted(iid, c[~is_item])
+    conf, cnt = v[~is_item], n[~is_item]
+    o = np.lexsort((name_rank[gc], -conf, ga))
+    ga, gc, conf, cnt = ga[o], gc[o], conf[o], cnt[o]
+
+    # Instances ranked ahead of each group within its antecedent.
+    first = np.ones(len(ga), dtype=bool)
+    first[1:] = ga[1:] != ga[:-1]
+    starts = np.flatnonzero(first)
+    ahead = np.cumsum(cnt) - cnt
+    ahead -= ahead[starts][np.cumsum(first) - 1]
+    take = np.minimum(cnt, np.maximum(5 - ahead, 0))
+    offsets = np.zeros(n_items + 1, dtype=np.int32)
+    offsets[1:] = np.cumsum(np.bincount(ga, weights=take, minlength=n_items))
+
+    if weighted:
+        lift = np.bincount(ga, weights=conf * cnt, minlength=n_items)
+    else:
+        lift = np.zeros(n_items)
+        lift[ga[starts]] = conf[starts]
+        lift *= np.bincount(ga, weights=cnt, minlength=n_items)
+
+    if with_patterns:
+        edges = np.unique(ga * n_items + gc)
+        root = np.arange(n_items)
+        labeled = _pattern_labels_local(
+            zip((edges // n_items).tolist(), (edges % n_items).tolist())
+        )
+        if labeled:
+            node, r = np.array(labeled, dtype=np.int64).T
+            root[node] = r
+        pattern = np.unique(root, return_inverse=True)[1] + 1
+    else:
+        pattern = np.zeros(n_items, dtype=np.int64)
+
+    table = pa.table(
+        {
+            "item": pa.array(names, type=pa.string()),
+            "support": support,
+            "lift_score": lift,
+            "pattern": pattern.astype(np.int64),
+            "consequents": pa.ListArray.from_arrays(
+                offsets, pa.array(names[np.repeat(gc, take)], type=pa.string())
+            ),
+            "confidence_scores": pa.ListArray.from_arrays(
+                offsets, pa.array(np.repeat(conf, take), type=pa.float64())
+            ),
+        }
+    )
+    return spark.createDataFrame(table, schema=_OUT_SCHEMA)
+
+
 def graph_association_rules(
     df: DataFrame,
     transaction_col: str = "transaction_id",
@@ -143,6 +271,7 @@ def graph_association_rules(
     weighted: bool = False,
     with_patterns: bool = True,
     skew_safe: bool = False,
+    max_local_edges: int | None = None,
 ) -> DataFrame:
     """Table function → ``(item, support, lift_score, pattern, consequents,
     confidence_scores)`` — the reference struct, pre-flattened.
@@ -159,7 +288,15 @@ def graph_association_rules(
     per-bucket top-5s, and duplicate pairs (the reference's no-dedup
     accumulation) survive because every row lands in exactly one salt
     bucket.  Same output, no per-key reducer hotspot at 100 TB.
+
+    ``max_local_edges`` guards the driver-local item-scale tail: when the
+    collapsed pair-group table has at most that many rows, top-5, lift,
+    patterns and row order are computed on the driver from one collect
+    (see ``_local_tail``).  ``None`` resolves through
+    ``spark.polars_grouper.maxLocalEdges`` (default 2M); ``0`` keeps the
+    whole tail distributed and issues no driver collect at all.
     """
+    spark = df.sparkSession
     freq = (
         F.col(frequency_col).cast("double")
         if frequency_col is not None
@@ -182,19 +319,14 @@ def graph_association_rules(
 
     # One shuffle serves both transaction-level needs: the per-transaction
     # sizes (for the max_itemset_size filter) and the distinct-transaction
-    # count (a cheap count over the checkpointed aggregate, not a second
-    # full countDistinct scan).
-    tx_sizes = truncate_lineage(t.groupBy("tx").agg(F.count(F.lit(1)).alias("sz")))
-    total_tx = tx_sizes.count()
+    # count, observed on the checkpoint job itself (no count job).
+    tx_sizes, n_tx = observed_count(
+        t.groupBy("tx").agg(F.count(F.lit(1)).alias("sz"))
+    )
+    tx_sizes = truncate_lineage(tx_sizes)
+    total_tx = n_tx.get["n"]
     if total_tx == 0:
-        spark = df.sparkSession
-        return spark.createDataFrame(
-            [],
-            schema=(
-                "item string, support double, lift_score double, pattern long, "
-                "consequents array<string>, confidence_scores array<double>"
-            ),
-        )
+        return spark.createDataFrame([], schema=_OUT_SCHEMA)
 
     # Per-item metrics; iid = first-appearance order (reference intern order).
     items = t.groupBy("item").agg(
@@ -274,11 +406,21 @@ def graph_association_rules(
     grouped = pairs.groupBy("a_iid", "consequent", "c_iid", "confidence").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    # Checkpoint only when a second consumer exists (r10): the top-5
-    # pass is the sole reader when with_patterns=False — an eager
-    # materialization there was one extra job chain per call.
-    if with_patterns:
-        grouped = truncate_lineage(grouped)
+    # Everything past this point is item-scale (≤ |valid items|² groups).
+    # Under the guard, one collect of the group table plus the valid-item
+    # table feeds a driver-side tail — the distributed tail below is ~15
+    # small jobs whose scheduling gaps dominate its run time.  With the
+    # tier disabled, ``grouped`` is checkpointed only when a second
+    # consumer (the pattern edges) exists.
+    guard = resolve_max_local_edges(spark, max_local_edges)
+    grouped, local = tier_gate(
+        grouped,
+        guard,
+        collect=lambda g: _local_tail_input(g, valid_items),
+        materialize=with_patterns,
+    )
+    if local is not None:
+        return _local_tail(spark, local, weighted=weighted, with_patterns=with_patterns)
 
     # top-5 by confidence desc, tie-break consequent asc, as parallel arrays.
     # Struct sort is lexicographic by field order, so (-confidence,
@@ -350,7 +492,7 @@ def graph_association_rules(
         assoc_edges = grouped.select(
             F.col("a_iid").alias("a"), F.col("c_iid").alias("c")
         ).distinct()
-        labels = _pattern_labels(assoc_edges)
+        labels = _pattern_labels(assoc_edges, guard)
         item_roots = (
             valid_items.join(labels, valid_items["iid"] == labels["iid"], "left")
             .select(

@@ -17,13 +17,25 @@ things go wrong at scale without care:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
 def truncate_lineage(df: DataFrame, *, cache: bool = True) -> DataFrame:
     """Materialize ``df`` and cut its lineage. Returns the checkpointed frame."""
     return df.localCheckpoint(eager=cache)
+
+
+def observed_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach a row count to ``df`` that rides its next action.
+
+    Returns ``(observed, obs)``; after an eager action on ``observed``
+    (``truncate_lineage``), ``obs.get["n"]`` is its exact row count with
+    no separate count job.  A lazy checkpoint reports 0 — the action
+    must actually run the plan.
+    """
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def agg_row(df: DataFrame):

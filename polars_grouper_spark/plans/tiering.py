@@ -26,11 +26,23 @@ join outputs (it multiplies child sizes), which would silently disable
 correct local tiers for join-derived edge frames, and parquet RLE means
 bytes bound rows in neither direction.  The conf-based kill switch is
 the operational lever instead.
+
+``tier_gate`` is the single-evaluation gate: the guard
+decision and the collected rows come from ONE materialization of the
+frame, so a non-deterministic plan cannot count one way and collect
+another, and no separate count job runs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from typing import TYPE_CHECKING, Callable
+
+from pyspark.sql import DataFrame, SparkSession
+
+from polars_grouper_spark.plans.iteration import observed_count, truncate_lineage
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 DEFAULT_MAX_LOCAL_EDGES = 2_000_000
 MAX_LOCAL_EDGES_CONF = "spark.polars_grouper.maxLocalEdges"
@@ -61,3 +73,36 @@ def resolve_max_local_edges(
                 f"{MAX_LOCAL_EDGES_CONF} must be an integer, got {raw!r}"
             ) from exc
     return default
+
+
+def tier_gate(
+    df: DataFrame,
+    guard: int,
+    *,
+    collect: Callable[[DataFrame], DataFrame] | None = None,
+    materialize: bool = True,
+) -> "tuple[DataFrame, pd.DataFrame | None]":
+    """Evaluate ``df`` once and pick its tier under a resolved ``guard``.
+
+    The frame is materialized by an eager ``localCheckpoint`` whose row
+    count rides the same job (``DataFrame.observe``).  Returns
+    ``(frame, local)``:
+
+    - count <= guard: ``local`` is the driver-side pandas frame of
+      ``collect(frame)`` (default: ``frame`` itself) — one Arrow
+      transfer; ``collect`` may project the checkpoint down to the
+      columns the local tier needs or union in small side tables.
+    - count > guard: ``local`` is None and ``frame`` is the checkpoint,
+      which the distributed path reuses — nothing past the guard is
+      evaluated twice.
+    - guard <= 0 (tier disabled): no count and no collect; ``frame`` is
+      checkpointed only when ``materialize`` (the distributed path
+      re-reads it), else ``df`` is returned untouched.
+    """
+    if guard <= 0:
+        return (truncate_lineage(df) if materialize else df), None
+    observed, obs = observed_count(df)
+    frame = truncate_lineage(observed)
+    if obs.get["n"] > guard:
+        return frame, None
+    return frame, (collect(frame) if collect is not None else frame).toPandas()

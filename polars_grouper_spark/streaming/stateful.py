@@ -63,6 +63,21 @@ FUNNEL_OUT_SCHEMA = "user_id long, depth int"
 FUNNEL_STATE_SCHEMA = "depth int, last_us long"
 
 
+def _step_events_in_order(raw_ns, event_types, mask):
+    """``(µs, event_type)`` of the masked events in event-time order.
+
+    A stable argsort on the RAW nanoseconds — identical visit order to
+    ``sort_values`` on the timestamps, original order only for exact ns
+    ties — and the truncation to µs happens after the sort, so two events
+    in the same microsecond keep their nanosecond order.
+    """
+    import numpy as np
+
+    raw = raw_ns[mask]
+    order = np.argsort(raw, kind="stable")
+    return zip((raw[order] // 1000).tolist(), event_types[mask][order].tolist())
+
+
 def streaming_funnel(
     df: DataFrame,
     steps: "list[str]",
@@ -103,10 +118,7 @@ def streaming_funnel(
         # numpy timestamp decode replaces a pd.Timestamp construction per
         # ROW (datetime64[ns].astype(int64) // 1000 is exactly
         # pd.Timestamp(ts).value // 1000), and a stable argsort on the
-        # event time replaces sort_values — identical visit order
-        # including original-order ties.
-        import numpy as np
-
+        # event time replaces sort_values (see ``_step_events_in_order``).
         depth, last_us = state.get if state.exists else (0, None)
         if last_us is not None and last_us < 0:
             last_us = None  # -1 sentinel: no step credited yet
@@ -122,10 +134,7 @@ def streaming_funnel(
             raw = tsv.astype("int64").to_numpy()
         else:
             raw = raw.astype("datetime64[ns]").astype("int64")
-        ts_us = (raw // 1000)[mask]
-        ets = batch[type_col].to_numpy()[mask]
-        order = np.argsort(ts_us, kind="stable")
-        for us, et in zip(ts_us[order].tolist(), ets[order].tolist()):
+        for us, et in _step_events_in_order(raw, batch[type_col].to_numpy(), mask):
             if depth >= n_steps:
                 break
             if et == step_list[depth] and (last_us is None or us > last_us):

@@ -348,3 +348,14 @@ def test_hard_negatives_unlabeled_anchor_yields_nothing(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     assert sim.hard_negatives(df, df.where("vec_id = 0"), k=2).count() == 0
+
+
+def test_lsh_buckets_quote_backticks_in_vector_column(spark):
+    """The bucket expression is parsed SQL: a backtick in the vector
+    column's name is escaped inside the quoted identifier, so the buckets
+    match the same vectors under a plain name."""
+    df = _vectors(spark)
+    odd = df.withColumnRenamed("embedding", "emb`v")
+    plain = sim.hyperplane_lsh_buckets(df, n_planes=4, dim=4).collect()
+    quoted = sim.hyperplane_lsh_buckets(odd, vec_col="emb`v", n_planes=4, dim=4).collect()
+    assert sorted(map(tuple, quoted)) == sorted(map(tuple, plain))

@@ -132,14 +132,17 @@ def _skewed_transactions(spark):
 def test_assoc_skew_safe_top5_parity_and_plan(spark):
     """skew_safe=True must produce the identical association table on a
     hot-antecedent dataset, with NO Window in the executed plan (the
-    default path windows on antecedent, concentrating the hot key)."""
+    default path windows on antecedent, concentrating the hot key).
+    ``max_local_edges=0`` keeps the tail distributed — under the default
+    guard it runs on the driver and the plan is a LocalTableScan."""
     from polars_grouper_spark.operators.association_rules import (
         graph_association_rules,
     )
 
     df = _skewed_transactions(spark)
     kwargs = dict(
-        min_support=0.0, min_confidence=0.0, weighted=False, with_patterns=False
+        min_support=0.0, min_confidence=0.0, weighted=False, with_patterns=False,
+        max_local_edges=0,
     )
     default = graph_association_rules(df, **kwargs)
     safe = graph_association_rules(df, skew_safe=True, **kwargs)
@@ -162,7 +165,7 @@ def test_assoc_skew_safe_top5_parity_and_plan(spark):
 
 def test_assoc_skew_safe_weighted_parity(spark):
     """Weighted confidences exercise non-uniform ordering through the
-    salted top-5 merge."""
+    salted top-5 merge (distributed tail: ``max_local_edges=0``)."""
     from polars_grouper_spark.operators.association_rules import (
         graph_association_rules,
     )
@@ -171,7 +174,8 @@ def test_assoc_skew_safe_weighted_parity(spark):
         "frequency", (F.xxhash64("transaction_id", "item_id") % 7 + 8) / 10.0
     )
     kwargs = dict(
-        min_support=0.0, min_confidence=0.05, weighted=True, with_patterns=False
+        min_support=0.0, min_confidence=0.05, weighted=True, with_patterns=False,
+        max_local_edges=0,
     )
     default = graph_association_rules(df, **kwargs).collect()
     safe = graph_association_rules(df, skew_safe=True, **kwargs).collect()

@@ -627,3 +627,18 @@ def test_replay_chunks_drop_null_ts_and_rerun_safely(spark, tmp_path):
     assert dirs == ["c0000"]
     back2 = spark.read.option("pathGlobFilter", "*.parquet").parquet(f"{out}/c*")
     assert sorted(r["id"] for r in back2.collect()) == [1, 2]
+
+
+def test_funnel_orders_same_microsecond_events_by_nanosecond():
+    """Step events are ordered on the raw nanoseconds and truncated to µs
+    only afterwards: two events in the same microsecond keep their ns
+    order, not their arrival order; exact ns ties keep arrival order."""
+    import numpy as np
+
+    from polars_grouper_spark.streaming.stateful import _step_events_in_order
+
+    raw = np.array([5_000_900, 5_000_100, 4_000_000, 5_000_100, 7_000_000])
+    types = np.array(["B", "A", "X", "C", "D"], dtype=object)
+    mask = np.array([True, True, True, True, False])
+    got = list(_step_events_in_order(raw, types, mask))
+    assert got == [(4000, "X"), (5000, "A"), (5000, "C"), (5000, "B")]
