@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_grouper_spark.plans.tiering import resolve_max_local_edges
+from polars_grouper_spark.plans.tiering import resolve_max_local_edges, tier_gate
 
 from .text import tokens
 
@@ -126,16 +126,11 @@ def _train(
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     vocab = _word_symbols(df, text_col)
-    # The vocab feeds every round (or the local collect); materialize it
-    # once (vocab-sized).  A probe-by-limit collect was tried instead of
-    # the count job and measured ~3x SLOWER: CollectLimit over a large
-    # limit executes partitions incrementally through the driver and
-    # re-runs the aggregation, while checkpoint+count+toPandas are three
-    # cheap jobs over materialized blocks.
-    vocab = vocab.localCheckpoint(eager=True)
+    # The vocab feeds every round (or the local collect); the gate
+    # materializes it once (vocab-sized) and counts it in the same job.
     guard = resolve_max_local_edges(df.sparkSession, max_local_vocab)
-    if guard and vocab.count() <= guard:
-        pdf = vocab.toPandas()
+    vocab, pdf = tier_gate(vocab, guard)
+    if pdf is not None:
         return _train_local(
             list(zip(pdf["s"].tolist(), (int(x) for x in pdf["n"]))), n_merges
         )

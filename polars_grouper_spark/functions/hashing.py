@@ -79,7 +79,3 @@ def salted(salt, col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     s = salt if isinstance(salt, Column) else F.lit(str(salt))
     return F.concat(s.cast("string"), F.lit("|"), c)
-
-
-def salted_sql(salt, expr: str) -> str:
-    return f"('{salt}' || '|' || {expr})"

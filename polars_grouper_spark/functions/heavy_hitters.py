@@ -44,7 +44,6 @@ bit-for-bit.
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import pyarrow as pa
@@ -145,8 +144,3 @@ SELECT item, cnt, round(cnt::DOUBLE / n, {decimals}) AS share
 FROM counted, tot
 WHERE cnt::DOUBLE > n * {float(min_share)!r}
 """
-
-
-def candidate_bound(min_share: float, n_batches: int) -> int:
-    """The provable phase-1 output bound: ``floor(1/s)`` per batch."""
-    return int(math.floor(1.0 / min_share)) * n_batches

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from polars_grouper_spark.plans.parallelism import local_result
 
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 from ..functions.hashing import portable_hash64_sql
 from .mis import _mis_local, maximal_independent_set
 
@@ -119,15 +119,16 @@ def greedy_coloring(
     below."""
     s = F.col(src).cast("string")
     d = F.col(dst).cast("string")
-    edges = truncate_lineage(
+    max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
+    edges, pdf = tier_gate(
         df.where(s.isNotNull() & d.isNotNull() & (s != d))
         .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
+        .distinct(),
+        max_local_edges,
     )
-    max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges and edges.count() <= max_local_edges:
+    if pdf is not None:
         colors = _coloring_local(
-            [(r["a"], r["b"]) for r in edges.collect()],
+            list(pdf.itertuples(index=False, name=None)),
             seed,
             max_colors,
             mis_max_rounds,

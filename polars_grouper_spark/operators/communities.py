@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
 def lpa_communities(
@@ -65,7 +65,7 @@ def lpa_communities(
     frame fits ``max_local_edges`` the rounds run driver-local as
     vectorized numpy group-argmax sweeps (codes from sorted
     ``np.unique``, so code order == label string order and the tiebreak
-    is bit-identical); ``max_local_edges=0`` skips the probing count.
+    is bit-identical); ``max_local_edges=0`` skips the tier entirely.
     The local tier mirrors every distributed quirk, including the
     directed-graph fact that a node with no in-edges leaves the label
     state after round 1.
@@ -77,13 +77,16 @@ def lpa_communities(
     base = df.where(s.isNotNull() & d.isNotNull() & (s != d)).select(
         s.alias("u"), d.alias("v")
     )
-    mirror = 1 if directed else 2
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges and base.count() * mirror <= max_local_edges:
+    base, pdf = tier_gate(
+        base,
+        max_local_edges if directed else max_local_edges // 2,
+        materialize=False,
+    )
+    if pdf is not None:
         import numpy as np
         import pandas as pd
 
-        pdf = base.toPandas()  # raw collect: see SCALE.md round-7b
         if not directed:
             pdf = pd.concat(
                 [pdf, pdf.rename(columns={"u": "v", "v": "u"})],

@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_grouper_spark.plans.iteration import fingerprint, truncate_lineage
-from polars_grouper_spark.plans.tiering import resolve_max_local_edges
+from polars_grouper_spark.plans.tiering import resolve_max_local_edges, tier_gate
 
 _MAX_ROUNDS = 50
 
@@ -186,16 +186,16 @@ def components(
 
     Two-tier (round 7): the min-name label is a pure function of the
     membership partition, so when the RAW edge frame fits
-    ``max_local_edges`` (one map-only count, no shuffle) the partition
-    comes from a driver-local vectorized union-find (numpy pointer
-    jumping over factorized int codes — ~10 ms per million edges per
-    sweep, so the 2M default costs well under a second beyond the Arrow
-    transfer) — no hashing, no star rounds — and is exact by
-    construction.  Pass ``max_local_edges=0`` to skip
-    the probing count on petabyte scans where it would be a wasted
-    pass; the guard counts RAW rows (conservative: never collects a
-    frame whose deduplicated size it underestimated).  The star loop
-    below is unchanged and remains the at-scale path.
+    ``max_local_edges`` (``plans.tiering.tier_gate``: one checkpoint
+    whose row count rides the same job) the partition comes from a
+    driver-local vectorized union-find (numpy pointer jumping over
+    factorized int codes — ~10 ms per million edges per sweep, so the
+    2M default costs well under a second beyond the Arrow transfer) —
+    no hashing, no star rounds — and is exact by construction.  The
+    guard counts RAW rows (conservative: never collects a frame whose
+    deduplicated size it underestimated).  The star loop below is
+    unchanged and remains the at-scale path; over the guard it reads
+    the gate's checkpoint.
 
     Skips the first-appearance numbering machinery entirely; labels are
     content-derived, so use this when reference intern-order numbering is
@@ -215,32 +215,12 @@ def components(
         F.col(from_col).cast("string").alias("u"),
         F.col(to_col).cast("string").alias("v"),
     ).where(F.col("u").isNotNull() & F.col("v").isNotNull())
-    # The guard counts the RAW frame and the local tier Arrow-collects the
-    # RAW frame: collecting through a localCheckpoint is ~3x slower (the
-    # blocks deserialize to Java rows before Arrow re-encodes them;
-    # measured 7.1 s vs 2.4 s on the 1.2M-edge doubled supplier-part
-    # graph), so the local path re-evaluates the input lineage once for
-    # the count instead — the count scan is column-pruned and cheap next
-    # to that penalty.  The distributed star loop below still checkpoints
-    # (it re-reads `edges` every round).
-    #
-    # CAVEAT (applies to every raw-count-guarded tier: components, hits,
-    # lpa, k-core, k-truss, matching, scc, toposort): evaluating the
-    # lineage twice means a NON-DETERMINISTIC input plan (rand()-derived
-    # or sampled edges) can yield a collected frame that differs from the
-    # counted one, so the guard decision and the collected data may
-    # disagree by a few rows.  The guard is a resource bound, not a
-    # semantic one — a small mismatch only shifts WHERE the fixpoint
-    # runs, never its result for the frame actually collected — but
-    # callers with non-deterministic edges who need plan-stable results
-    # should localCheckpoint/cache the frame themselves first (or pass
-    # max_local_edges=0).
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges and edges.count() <= max_local_edges:
+    edges, pdf = tier_gate(edges, max_local_edges, materialize=False)
+    if pdf is not None:
         import numpy as np
         import pandas as pd
 
-        pdf = edges.toPandas()  # Arrow transfer ≫ Row-object collect
         # Vectorized hook-to-min union-find: factorize names to dense int
         # codes (hash-based, no sort), then alternate full pointer-jump
         # compression with a min-root hook per edge.  Each sweep is a
@@ -274,7 +254,8 @@ def components(
             out[["node", "component"]].sort_values("node"),
             "node string, component string",
         )
-    edges = truncate_lineage(edges, cache=False)
+    if max_local_edges <= 0:  # else `edges` is already the gate's checkpoint
+        edges = truncate_lineage(edges, cache=False)
     nodes = edges.select(F.explode(F.array("u", "v")).alias("node")).distinct()
     nodes = nodes.select("node", F.xxhash64("node").alias("id"))
     if verify_injective:
@@ -358,14 +339,13 @@ def connected_components(
     # so a raw edge frame under the guard solves with the vectorized
     # union-find and numbers locally — replacing the node-table shuffle,
     # the star rounds (4+ jobs each) and the label/numbering joins with
-    # one Arrow collect.  The raw-count caveat documented on
-    # ``components`` applies here too.
+    # one Arrow collect.
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges and edges.count() <= max_local_edges:
+    edges, pdf = tier_gate(edges, max_local_edges, materialize=False)
+    if pdf is not None:
         import numpy as np
         import pandas as pd
 
-        pdf = edges.toPandas()  # one evaluation: _i frozen with the rows
         codes, names = pd.factorize(
             pd.concat([pdf["src"], pdf["dst"]], ignore_index=True)
         )

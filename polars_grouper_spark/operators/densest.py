@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from polars_grouper_spark.plans.parallelism import local_result
 
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
 def _peel_local(
@@ -81,12 +81,6 @@ def densest_subgraph_rounds(
         )
     s = F.col(src).cast("string")
     d = F.col(dst).cast("string")
-    edges = truncate_lineage(
-        df.where(s.isNotNull() & d.isNotNull() & (s != d))
-        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
-    )
-
     spark = df.sparkSession
     # Guarded local tier (r9-opt, the repo's standard two-tier shape):
     # the distributed peel is O(rounds) driver-round-trip jobs over a
@@ -95,8 +89,14 @@ def densest_subgraph_rounds(
     # removes every per-round job.  Above the guard (or with the tier
     # disabled) the distributed loop below is unchanged.
     max_local_edges = resolve_max_local_edges(spark, max_local_edges)
-    if max_local_edges and edges.count() <= max_local_edges:
-        rows = [(r["a"], r["b"]) for r in edges.collect()]
+    edges, pdf = tier_gate(
+        df.where(s.isNotNull() & d.isNotNull() & (s != d))
+        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
+        .distinct(),
+        max_local_edges,
+    )
+    if pdf is not None:
+        rows = list(pdf.itertuples(index=False, name=None))
         out = local_result(
             spark,
             _peel_local(rows, eps_num, eps_den, max_rounds),

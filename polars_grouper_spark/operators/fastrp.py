@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64, portable_hash64_sql
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
 def _fastrp_local(u_names, v_names, dim, sparsity, w1, w2):
@@ -170,15 +170,6 @@ def fastrp_embedding(
         half = base.select(
             F.least(s, d).alias("u"), F.greatest(s, d).alias("v")
         ).distinct()
-    half = truncate_lineage(half)
-    edges = (
-        half
-        if directed
-        else half.union(
-            half.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-    )
-
     mle = resolve_max_local_edges(df.sparkSession, max_local_edges)
     # Hard exactness cap on the local tier regardless of how high the
     # session/call guard is raised (r10, ADVICE): _fastrp_local
@@ -186,23 +177,27 @@ def fastrp_embedding(
     # exact only while every partial sum stays under 2^53.  Values are
     # bounded by |lvl2| <= E^2, so E <= 2^26 keeps E^2 <= 2^52 with a
     # 2x margin; above that the distributed integer path runs instead.
-    if mle:
-        mle = min(mle, 1 << 26)
-    if portable and mle:
-        n_half = half.count()
-        if (n_half if directed else 2 * n_half) <= mle:
-            import numpy as np
-            import pandas as pd
+    mle = min(mle, 1 << 26) if portable else 0
+    half, pdf = tier_gate(half, mle if directed else mle // 2)
+    if pdf is not None:
+        import numpy as np
+        import pandas as pd
 
-            pdf = half.toPandas()
-            u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
-            if not directed:
-                u, v = np.concatenate([u, v]), np.concatenate([v, u])
-            node_c, dim_c, val_c = _fastrp_local(u, v, dim, sparsity, w1, w2)
-            return df.sparkSession.createDataFrame(
-                pd.DataFrame({"node": node_c, "dim": dim_c, "val": val_c}),
-                "node string, dim int, val long",
-            )
+        u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+        if not directed:
+            u, v = np.concatenate([u, v]), np.concatenate([v, u])
+        node_c, dim_c, val_c = _fastrp_local(u, v, dim, sparsity, w1, w2)
+        return df.sparkSession.createDataFrame(
+            pd.DataFrame({"node": node_c, "dim": dim_c, "val": val_c}),
+            "node string, dim int, val long",
+        )
+    edges = (
+        half
+        if directed
+        else half.union(
+            half.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+    )
 
     # WIDE layout (r9-opt, same trick as the MinHash signature layout):
     # the sparse (node, dim, val) pipeline multiplied every edge row by

@@ -31,10 +31,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
-def _hits_local(spark, base, iters: int):
+def _hits_local(spark, pdf, iters: int):
     """Driver-local mirror of the integer HITS recursion: int64
     ``np.add.at`` scatter-sums (associative integers — order-pure).
     Declines (returns None) when any half-round's float-estimated max
@@ -44,7 +44,7 @@ def _hits_local(spark, base, iters: int):
     import numpy as np
     import pandas as pd
 
-    pdf = base.toPandas().drop_duplicates(["u", "v"], ignore_index=True)
+    pdf = pdf.drop_duplicates(["u", "v"], ignore_index=True)
     schema = (
         "node string, authority long, hub long, "
         "auth_norm double, hub_norm double"
@@ -107,12 +107,13 @@ def hits(
         s.alias("u"), d.alias("v")
     )
     # Two-tier (round 7): the recursion is integer-exact (associative
-    # sums — aggregation-order-pure), so under the raw-count guard it
+    # sums — aggregation-order-pure), so under the raw-row guard it
     # runs driver-local; scores estimated above 2^61 decline to the
     # distributed tier, which owns the exact decimal overflow guard.
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges and base.count() <= max_local_edges:
-        local = _hits_local(df.sparkSession, base, iters)
+    base, pdf = tier_gate(base, max_local_edges, materialize=False)
+    if pdf is not None:
+        local = _hits_local(df.sparkSession, pdf, iters)
         if local is not None:
             return local
     edges = truncate_lineage(base.distinct())

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from polars_grouper_spark.plans.parallelism import local_result
 
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
 def _katz_local(
@@ -92,16 +92,15 @@ def katz_centrality(
         raise ValueError(f"iters must be >= 1, got {iters}")
     s = F.col(src).cast("string")
     d = F.col(dst).cast("string")
-    edges = truncate_lineage(
+    max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
+    edges, pdf = tier_gate(
         df.where(s.isNotNull() & d.isNotNull())
         .select(s.alias("u"), d.alias("v"))
-        .distinct()
+        .distinct(),
+        max_local_edges,
     )
-    max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges and edges.count() <= max_local_edges:
-        rows = _katz_local(
-            [(r["u"], r["v"]) for r in edges.collect()], m, iters
-        )
+    if pdf is not None:
+        rows = _katz_local(list(pdf.itertuples(index=False, name=None)), m, iters)
         return local_result(
             df.sparkSession, rows, "node string, raw long, katz double"
         )

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.iteration import fingerprint, truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 from .triangles import _interned_edges
 
 
@@ -66,14 +66,13 @@ def _peel_arrays(ea, eb, n_nodes: int, k: int, max_iter: int):
     )
 
 
-def _k_core_local(spark, cleaned, k: int, max_iter: int):
-    """Driver-local synchronous peel over the collected distinct edge
-    set; same round structure as the distributed loop, so the round
+def _k_core_local(spark, pdf, k: int, max_iter: int):
+    """Driver-local synchronous peel over the collected raw (s, d) edge
+    rows; same round structure as the distributed loop, so the round
     bound (``max_iter``) and the convergence error carry over verbatim."""
     import numpy as np
     import pandas as pd
 
-    pdf = cleaned.toPandas()
     schema = "node string, core_deg long"
     if not len(pdf):
         return spark.createDataFrame([], schema)
@@ -94,16 +93,15 @@ def _k_core_local(spark, cleaned, k: int, max_iter: int):
     return spark.createDataFrame(out, schema)
 
 
-def _k_core_finish_local(spark, edges, k: int, max_iter: int, names):
-    """Finish a partially peeled DISTRIBUTED run driver-local: ``edges``
-    is the residual (a, b) long-id frame (distinct canonical pairs) once
-    its count fell under the guard, ``names`` the id->node map.  Exact by
-    k-core uniqueness — the core of the residual IS the core of the
-    original graph, whichever round the tiers switch at."""
+def _k_core_finish_local(spark, pdf, k: int, max_iter: int, names):
+    """Finish a partially peeled DISTRIBUTED run driver-local: ``pdf``
+    holds the residual (a, b) long-id rows (distinct canonical pairs)
+    once their count fell under the guard, ``names`` the id->node map.
+    Exact by k-core uniqueness — the core of the residual IS the core of
+    the original graph, whichever round the tiers switch at."""
     import pandas as pd
 
     schema = "node string, core_deg long"
-    pdf = edges.toPandas()
     if not len(pdf):
         return spark.createDataFrame([], schema)
     codes, ids = pd.factorize(
@@ -153,19 +151,22 @@ def k_core(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     # Two-tier (round 7): the k-core is the UNIQUE maximal subgraph with
-    # min degree >= k (order-independent), so under the raw-count guard
+    # min degree >= k (order-independent), so under the raw-row guard
     # the synchronous peel runs driver-local as numpy bincount/mask
     # sweeps — bit-identical output by uniqueness, same round semantics.
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges:
-        s = F.col(src).cast("string")
-        d = F.col(dst).cast("string")
-        cleaned = df.where(s.isNotNull() & d.isNotNull() & (s != d)).select(
+    s = F.col(src).cast("string")
+    d = F.col(dst).cast("string")
+    cleaned, pdf = tier_gate(
+        df.where(s.isNotNull() & d.isNotNull() & (s != d)).select(
             s.alias("s"), d.alias("d")
-        )
-        if cleaned.count() <= max_local_edges:
-            return _k_core_local(df.sparkSession, cleaned, k, max_iter)
-    edges, names = _interned_edges(df, src, dst)
+        ),
+        max_local_edges,
+        materialize=False,
+    )
+    if pdf is not None:
+        return _k_core_local(df.sparkSession, pdf, k, max_iter)
+    edges, names = _interned_edges(cleaned, "s", "d")
     # CC's loop pattern: lazy checkpoint per round, with the one-job
     # (count, bit_xor) fingerprint as BOTH the materializing action and
     # the convergence probe — exactly one Spark job per peel round.
@@ -196,9 +197,11 @@ def k_core(
         # O(V) Spark jobs into however many rounds it takes the residual
         # to fall under the guard, plus one numpy sweep.
         if max_local_edges and cur[0] <= max_local_edges:
-            return _k_core_finish_local(
-                df.sparkSession, new_edges, k, max_iter, names
-            )
+            _, pdf = tier_gate(new_edges, max_local_edges)
+            if pdf is not None:
+                return _k_core_finish_local(
+                    df.sparkSession, pdf, k, max_iter, names
+                )
         edges, prev = new_edges, cur
     raise RuntimeError(
         f"k_core did not converge within max_iter={max_iter} peeling rounds; "

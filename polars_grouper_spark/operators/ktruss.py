@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.iteration import fingerprint, truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 from .triangles import _interned_edges
 
 # Max wedge entries materialized per chunk by the local tier's CSR wedge
@@ -80,7 +80,7 @@ def _enumerate_triangles(
     ).select("u", "v1", "v2")
 
 
-def _k_truss_local(spark, cleaned, min_support: int, max_iter: int):
+def _k_truss_local(spark, pdf, min_support: int, max_iter: int):
     """Driver-local synchronous support peel.  The k-truss is the unique
     maximal subgraph in which every edge closes >= k-2 triangles —
     order-independent, like the k-core — so any correct peel order gives
@@ -91,7 +91,6 @@ def _k_truss_local(spark, cleaned, min_support: int, max_iter: int):
     import numpy as np
     import pandas as pd
 
-    pdf = cleaned.toPandas()
     schema = "src string, dst string, support long"
     su, sd = pdf["s"].to_numpy(), pdf["d"].to_numpy()
     canon = pd.DataFrame(
@@ -209,17 +208,16 @@ def _truss_peel_keys(keys, n_nodes: int, min_support: int, max_iter: int):
     )
 
 
-def _k_truss_finish_local(spark, edges, min_support: int, max_iter: int, names):
+def _k_truss_finish_local(spark, pdf, min_support: int, max_iter: int, names):
     """Finish a partially peeled DISTRIBUTED run driver-local (round-9,
-    the k-core pattern): ``edges`` is the residual (a, b) long-id frame
-    once its count fell under the guard, ``names`` the id->node map.
+    the k-core pattern): ``pdf`` holds the residual (a, b) long-id rows
+    once their count fell under the guard, ``names`` the id->node map.
     Factorizes the long ids, runs the shared numpy peel, and joins the
     name map back for the (src, dst, support) output."""
     import numpy as np
     import pandas as pd
 
     schema = "src string, dst string, support long"
-    pdf = edges.toPandas()
     if not len(pdf):
         return spark.createDataFrame([], schema)
     codes, ids = pd.factorize(
@@ -296,20 +294,21 @@ def k_truss(
     min_support = k - 2
     # Two-tier (round 7): the k-truss is the unique maximal subgraph
     # with edge support >= k-2 (order-independent), so under the
-    # raw-count guard the peel runs driver-local as vectorized CSR wedge
+    # raw-row guard the peel runs driver-local as vectorized CSR wedge
     # sweeps — bit-identical output by uniqueness.
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges:
-        s = F.col(src).cast("string")
-        d = F.col(dst).cast("string")
-        cleaned = df.where(s.isNotNull() & d.isNotNull() & (s != d)).select(
+    s = F.col(src).cast("string")
+    d = F.col(dst).cast("string")
+    cleaned, pdf = tier_gate(
+        df.where(s.isNotNull() & d.isNotNull() & (s != d)).select(
             s.alias("s"), d.alias("d")
-        )
-        if cleaned.count() <= max_local_edges:
-            return _k_truss_local(
-                df.sparkSession, cleaned, min_support, max_iter
-            )
-    edges, names = _interned_edges(df, src, dst)
+        ),
+        max_local_edges,
+        materialize=False,
+    )
+    if pdf is not None:
+        return _k_truss_local(df.sparkSession, pdf, min_support, max_iter)
+    edges, names = _interned_edges(cleaned, "s", "d")
     edges = truncate_lineage(edges, cache=False)
     prev = fingerprint(edges, "a", "b")
     # Triangle-list peel (round-9 optimization, the classic MapReduce
@@ -363,9 +362,11 @@ def k_truss(
             # Mid-loop local finish (round-9): once the residual fits the
             # guard, the remaining peel rounds run driver-local in one
             # Arrow collect — exact by k-truss uniqueness.
-            return _k_truss_finish_local(
-                df.sparkSession, new_edges, min_support, max_iter, names
-            )
+            _, pdf = tier_gate(new_edges, max_local_edges)
+            if pdf is not None:
+                return _k_truss_finish_local(
+                    df.sparkSession, pdf, min_support, max_iter, names
+                )
         if cur == prev:
             # fixpoint: new_edges == edges, so sup IS the final support
             # table (equal fingerprint count ⇒ nothing was filtered)

@@ -32,7 +32,7 @@ from ..functions.hashing import (
     portable_hash64_sql,
 )
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
 def _matching_local(
@@ -125,14 +125,15 @@ def greedy_matching(
         F.least(s, d).alias("a"), F.greatest(s, d).alias("b")
     )
     spark = df.sparkSession
-    # Local tier probes and collects the RAW canonical pairs (dedup in
-    # pandas) — no checkpoint, no Spark-side priority column (the local
-    # kernel computes identical priorities via the Python hash mirror).
+    # Local tier collects the RAW canonical pairs (dedup in pandas) — no
+    # Spark-side priority column (the local kernel computes identical
+    # priorities via the Python hash mirror).
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if portable and max_local_edges and cleaned.count() <= max_local_edges:
-        import pandas as pd
-
-        pdf = cleaned.toPandas().drop_duplicates(ignore_index=True)
+    cleaned, pdf = tier_gate(
+        cleaned, max_local_edges if portable else 0, materialize=False
+    )
+    if pdf is not None:
+        pdf = pdf.drop_duplicates(ignore_index=True)
         return local_result(
             spark,
             sorted(

@@ -31,7 +31,7 @@ from ..functions.hashing import (
     portable_hash64_sql,
 )
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
 def _mis_local(
@@ -105,15 +105,16 @@ def maximal_independent_set(
     """
     s = F.col(src).cast("string")
     d = F.col(dst).cast("string")
-    edges = truncate_lineage(
+    max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
+    edges, pdf = tier_gate(
         df.where(s.isNotNull() & d.isNotNull() & (s != d))
         .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
-        .distinct()
+        .distinct(),
+        max_local_edges if portable else 0,
     )
-    max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if portable and max_local_edges and edges.count() <= max_local_edges:
+    if pdf is not None:
         flags = _mis_local(
-            [(r["a"], r["b"]) for r in edges.collect()], seed, max_rounds
+            list(pdf.itertuples(index=False, name=None)), seed, max_rounds
         )
         return local_result(
             df.sparkSession, sorted(flags.items()), "node string, in_mis boolean"

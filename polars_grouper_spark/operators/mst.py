@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from polars_grouper_spark.plans.parallelism import local_result
 
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 from .connected_components import components
 
 
@@ -93,7 +93,8 @@ def minimum_spanning_forest(
     s = F.col(src).cast("string")
     d = F.col(dst).cast("string")
     w = F.col(weight).cast("double")
-    edges = truncate_lineage(
+    max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
+    edges, pdf = tier_gate(
         df.where(s.isNotNull() & d.isNotNull() & w.isNotNull() & (s != d))
         .select(
             F.least(s, d).alias("a"),
@@ -101,17 +102,13 @@ def minimum_spanning_forest(
             (w * 1000.0).cast("long").alias("wq"),
         )
         .groupBy("a", "b")
-        .agg(F.min("wq").alias("wq"))
+        .agg(F.min("wq").alias("wq")),
+        max_local_edges,
     )
-    max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges and edges.count() <= max_local_edges:
+    if pdf is not None:
         return local_result(
             df.sparkSession,
-            sorted(
-                _kruskal_local(
-                    [(r["a"], r["b"], r["wq"]) for r in edges.collect()]
-                )
-            ),
+            sorted(_kruskal_local(list(pdf.itertuples(index=False, name=None)))),
             "edge_a string, edge_b string, weight double",
         )
 
@@ -160,7 +157,7 @@ def minimum_spanning_forest(
             # disables the inner CC local tier too (r8 ADVICE) — the
             # component graph shrinks below the guard long before the
             # Borůvka loop ends, so without forwarding an explicit 0
-            # would still trigger count probes + Arrow collects here
+            # would still trigger gated Arrow collects here
             max_local_edges=max_local_edges,
         ).select(F.col("node").alias("comp"), F.col("component").alias("newc"))
         comp = truncate_lineage(

@@ -31,13 +31,13 @@ from pyspark.sql import functions as F
 from ..functions.hashing import portable_hash64, portable_hash64_sql
 from ..functions.sketches import _alpha, _HASH_BITS
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
 _BALL_LOCAL_MAX_CELLS = 128 * 1024 * 1024
 
 
-def _ball_local(spark, base, directed, radius, b):
+def _ball_local(spark, pdf, directed, radius, b):
     """Driver-local mirror of the HLL ball hop-merge: dense (V, 2^b)
     int8 register matrix, one synchronous ``np.maximum.at`` scatter per
     hop (max-merge is order-pure, so this tier is exact up to the
@@ -52,7 +52,6 @@ def _ball_local(spark, base, directed, radius, b):
     from ..functions.hashing import portable_hash64_py
     from ..functions.sketches import _HASH_BITS, _alpha
 
-    pdf = base.toPandas()
     if not directed:
         pdf = pd.concat(
             [pdf, pdf.rename(columns={"u": "v", "v": "u"})], ignore_index=True
@@ -135,19 +134,19 @@ def hll_ball_size(
     )
     # Two-tier (round 7): register state is an integer max-merge —
     # partition/order-pure — and the node hash has a bit-exact Python
-    # mirror, so under the raw-count guard the hop merges run as numpy
+    # mirror, so under the raw-row guard the hop merges run as numpy
     # 2-D scatter-max sweeps over a dense (V, 2^b) register matrix
     # (declined when that matrix would exceed ~128M cells; the estimate
     # tail mirrors the Spark formula, whose round-to-4 output absorbs
     # float-order noise by many orders of magnitude).
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    mirror = 1 if directed else 2
-    if (
-        max_local_edges
-        and portable
-        and base.count() * mirror <= max_local_edges
-    ):
-        out = _ball_local(df.sparkSession, base, directed, radius, b)
+    base, pdf = tier_gate(
+        base,
+        (max_local_edges if directed else max_local_edges // 2) if portable else 0,
+        materialize=False,
+    )
+    if pdf is not None:
+        out = _ball_local(df.sparkSession, pdf, directed, radius, b)
         if out is not None:
             return out
     edges = base.distinct()

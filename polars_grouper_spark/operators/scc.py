@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from polars_grouper_spark.plans.parallelism import local_result
 
 from ..plans.iteration import fingerprint, truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
 def _clean_edges(df: DataFrame, src: str, dst: str) -> "tuple[DataFrame, DataFrame]":
@@ -179,11 +179,10 @@ def strongly_connected_components(
     """
     spark = df.sparkSession
     edges, names = _clean_edges(df, src, dst)
-    edges = truncate_lineage(edges)
-
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges and edges.count() <= max_local_edges:
-        comp = _scc_local([(r["u"], r["v"]) for r in edges.collect()])
+    edges, pdf = tier_gate(edges, max_local_edges)
+    if pdf is not None:
+        comp = _scc_local(list(pdf.itertuples(index=False, name=None)))
         id2name = {r["id"]: r["node"] for r in names.collect()}
         best: dict = {}
         for nid, rep in comp.items():
@@ -438,14 +437,13 @@ WHERE lu.scc <> lv.scc
 """
 
 
-def _bowtie_local(spark, edge_rows) -> DataFrame:
+def _bowtie_local(spark, pairs) -> DataFrame:
     """Driver-local mirror of :func:`bowtie_decomposition` over the
     deduplicated (u, v) string pairs: Tarjan SCC, min-name component
     labels, giant = largest-then-lexicographically-first component,
     forward/backward BFS closures from the core."""
     from collections import Counter, defaultdict, deque
 
-    pairs = [(r["u"], r["v"]) for r in edge_rows]
     if not pairs:
         return local_result(spark, [], "node string, region string")
     comp = _scc_local(pairs)
@@ -521,17 +519,18 @@ def bowtie_decomposition(
     so the tiers agree exactly)."""
     s = F.col(src).cast("string")
     d = F.col(dst).cast("string")
-    edges = truncate_lineage(
+    max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
+    edges, pdf = tier_gate(
         df.where(s.isNotNull() & d.isNotNull() & (s != d))
         .select(s.alias("u"), d.alias("v"))
-        .distinct()
+        .distinct(),
+        max_local_edges,
     )
-    max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges and edges.count() <= max_local_edges:
-        return _bowtie_local(df.sparkSession, edges.collect())
+    if pdf is not None:
+        return _bowtie_local(df.sparkSession, list(pdf.itertuples(index=False, name=None)))
     scc = truncate_lineage(
         # forward the RESOLVED guard (r8 ADVICE): per-call 0 must disable
-        # the inner SCC count probe too, not just this function's tier
+        # the inner SCC tier gate too, not just this function's tier
         strongly_connected_components(edges, "u", "v", max_local_edges=max_local_edges)
     )
     giant_row = (

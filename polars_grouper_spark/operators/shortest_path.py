@@ -27,6 +27,7 @@ output is inherent to the operator; ``sources=`` bounds it at scale
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -35,7 +36,7 @@ from pyspark.sql import functions as F
 from polars_grouper_spark.plans.parallelism import local_result
 
 from polars_grouper_spark.plans.iteration import truncate_lineage
-from polars_grouper_spark.plans.tiering import resolve_max_local_edges
+from polars_grouper_spark.plans.tiering import resolve_max_local_edges, tier_gate
 
 _MAX_ROUNDS = 200
 # Frontier row count below which the per-round join broadcasts the
@@ -332,99 +333,87 @@ def calculate_shortest_path(
     ).where(F.col("u").isNotNull() & F.col("v").isNotNull() & F.col(weight_col).isNotNull())
 
     q_cut = int(max_distance * 1000.0) if max_distance is not None else None
-    # Local-tier probe runs on the RAW frame — uncollapsed, unmirrored,
-    # un-checkpointed: one narrow aggregate (count + weight min/max, no
-    # shuffle) decides the tier, then ONE Arrow collect feeds the local
-    # kernel, which mirrors in pandas.  Three reasons: Arrow-collecting a
-    # localCheckpoint is ~3x slower than collecting the plan itself (the
-    # blocks deserialize to Java rows first); the Spark-side min-collapse
-    # is a full shuffle the local kernels don't need (parallel edges
-    # change work, never results); and the raw row count upper-bounds the
-    # collapsed count, so the guard stays conservative.  Work bounds use
-    # |sources| (free) or 2|E| >= |V| — never an extra count job.
-    # ``max_local_edges=0`` is the documented lever for skipping the
-    # probing pass entirely (round-8, judge advice): callers disabling
-    # the local tier on a petabyte plan must not pay this scan, so the
-    # aggregate only runs when a local tier is actually reachable —
-    # mirroring the short-circuit in components/lpa/k_core.
+    # The local tier collects the RAW frame — uncollapsed, unmirrored —
+    # and mirrors in pandas: the Spark-side min-collapse is a full
+    # shuffle the local kernels don't need (parallel edges change work,
+    # never results), and the raw row count upper-bounds the collapsed
+    # count, so the guard stays conservative.  The guard also folds in
+    # the argument-only part of the work bounds: a graph of n_eff
+    # mirrored edges can qualify for a local kernel only if |sources|
+    # (else the crude |V| <= 2 n_eff bound) times n_eff fits a work
+    # budget, or the query has a cutoff.  The exact tier choice happens
+    # AFTER the collect with the true node count and weight range; a
+    # collect that then qualifies for no tier falls through to the
+    # distributed loop over the gate's checkpoint (wasted work bounded
+    # by the guard, same contract as the dial meter).
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if max_local_edges:
-        stats = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("q").alias("lo"),
-            F.max("q").alias("hi"),
-        ).collect()[0]
-        n_raw, wlo, whi = stats["n"], stats["lo"], stats["hi"]
-    else:
-        n_raw, wlo, whi = 0, None, None
     mirror = 1 if directed else 2
-    n_eff = n_raw * mirror
-    if n_raw and n_eff <= max_local_edges and wlo is not None and wlo >= 0:
-        uniform = wlo == whi and wlo > 0
-        # Pre-collect viability check uses |sources| when given, else the
-        # crude |V| <= 2|E| bound; the exact tier choice happens AFTER
-        # the collect with the true node count (all-pairs on small dense
-        # graphs — e.g. region cliques — fail the crude bound but pass
-        # the exact one).  A collect that then qualifies for no tier is
-        # wasted work bounded by ``max_local_edges`` rows, same contract
-        # as the dial meter.
-        n_src_bound = len(set(sources)) if sources is not None else 2 * n_eff
-        viable = (
-            (uniform and n_src_bound * n_eff <= max_local_bfs_work)
-            or n_src_bound * n_eff <= max_local_work
-            or q_cut is not None
-            or (sources is None and n_eff <= max_local_work)
+    guard = max_local_edges
+    if q_cut is None:
+        work = max(max_local_work, max_local_bfs_work)
+        if sources is not None:
+            n_src_bound = len(set(sources))
+            if n_src_bound:
+                guard = min(guard, work // n_src_bound)
+        else:
+            guard = min(guard, max(math.isqrt(work // 2), max_local_work))
+    edges, pdf = tier_gate(edges, guard // mirror, materialize=False)
+    if pdf is not None and not len(pdf):
+        return local_result(
+            df.sparkSession, [], "from string, to string, distance double"
         )
-        if viable:
-            import pandas as pd
+    if pdf is not None and pdf["q"].min() >= 0:
+        import pandas as pd
 
-            pdf = edges.toPandas()  # Arrow transfer ≫ Row-object collect
-            if not directed:
-                pdf = pd.concat(
-                    [pdf, pdf.rename(columns={"u": "v", "v": "u"})],
-                    ignore_index=True,
-                )
-            present = set(pdf["u"]).union(pdf["v"])
-            # Normalize sources to string before intersecting: the edge
-            # endpoints were cast("string") Spark-side, and the
-            # distributed tier's ``isin(sources)`` applies the same
-            # coercion — a raw-object intersection would silently drop
-            # non-string sources (e.g. ints for numeric node ids) and
-            # return an empty result only on the local tier.
-            src_list = sorted(
-                present
-                if sources is None
-                else present.intersection(str(s) for s in sources)
+        wlo, whi = int(pdf["q"].min()), int(pdf["q"].max())
+        uniform = wlo == whi and wlo > 0
+        n_eff = len(pdf) * mirror
+        if not directed:
+            pdf = pd.concat(
+                [pdf, pdf.rename(columns={"u": "v", "v": "u"})],
+                ignore_index=True,
             )
-            n_src = len(src_list)
-            if uniform and n_src * n_eff <= max_local_bfs_work:
-                out_pdf = _bfs_local(pdf, src_list, directed, int(wlo), q_cut)
+        present = set(pdf["u"]).union(pdf["v"])
+        # Normalize sources to string before intersecting: the edge
+        # endpoints were cast("string") Spark-side, and the
+        # distributed tier's ``isin(sources)`` applies the same
+        # coercion — a raw-object intersection would silently drop
+        # non-string sources (e.g. ints for numeric node ids) and
+        # return an empty result only on the local tier.
+        src_list = sorted(
+            present
+            if sources is None
+            else present.intersection(str(s) for s in sources)
+        )
+        n_src = len(src_list)
+        if uniform and n_src * n_eff <= max_local_bfs_work:
+            out_pdf = _bfs_local(pdf, src_list, directed, int(wlo), q_cut)
+            return df.sparkSession.createDataFrame(
+                out_pdf, "from string, to string, distance double"
+            )
+        if n_src * n_eff <= max_local_work:
+            edge_rows = list(
+                zip(pdf["u"], pdf["v"], (int(q) for q in pdf["q"]))
+            )
+            rows = _dijkstra_local(edge_rows, src_list, directed, q_cut)
+            if rows is not None:
+                return local_result(
+                    df.sparkSession,
+                    rows,
+                    "from string, to string, distance double",
+                )
+        elif q_cut is not None:
+            # Cutoff queries: true work is the cutoff-ball volume,
+            # unknowable a priori — attempt the vectorized Dial
+            # kernel under a gather meter; fall back to the
+            # distributed loop if it trips.
+            out_pdf = _dial_local(
+                pdf, src_list, directed, q_cut, max_gather=max_local_bfs_work
+            )
+            if out_pdf is not None:
                 return df.sparkSession.createDataFrame(
                     out_pdf, "from string, to string, distance double"
                 )
-            if n_src * n_eff <= max_local_work:
-                edge_rows = list(
-                    zip(pdf["u"], pdf["v"], (int(q) for q in pdf["q"]))
-                )
-                rows = _dijkstra_local(edge_rows, src_list, directed, q_cut)
-                if rows is not None:
-                    return local_result(
-                        df.sparkSession,
-                        rows,
-                        "from string, to string, distance double",
-                    )
-            elif q_cut is not None:
-                # Cutoff queries: true work is the cutoff-ball volume,
-                # unknowable a priori — attempt the vectorized Dial
-                # kernel under a gather meter; fall back to the
-                # distributed loop if it trips.
-                out_pdf = _dial_local(
-                    pdf, src_list, directed, q_cut, max_gather=max_local_bfs_work
-                )
-                if out_pdf is not None:
-                    return df.sparkSession.createDataFrame(
-                        out_pdf, "from string, to string, distance double"
-                    )
 
     # Distributed path: parallel edges only ever contribute their
     # minimum; collapsing them up front keeps the per-round join small.

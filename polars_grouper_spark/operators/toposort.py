@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from polars_grouper_spark.plans.parallelism import local_result
 
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
 def _kahn_local(spark, edge_rows, max_rounds: int) -> DataFrame:
@@ -117,17 +117,16 @@ def topological_levels(
     )
     s = F.col(src).cast("string")
     d = F.col(dst).cast("string")
-    edges = truncate_lineage(
+    edges, pdf = tier_gate(
         df.where(s.isNotNull() & d.isNotNull())
         .select(s.alias("u"), d.alias("v"))
-        .distinct()
+        .distinct(),
+        max_local_edges,
     )
-    if max_local_edges:
-        n_edges = edges.count()
-        if n_edges == 0:
-            return local_result(spark, [], "node string, level int")
-        if n_edges <= max_local_edges:
-            return _kahn_local(spark, edges.collect(), max_rounds)
+    if pdf is not None:
+        return _kahn_local(
+            spark, pdf.itertuples(index=False, name=None), max_rounds
+        )
     # state = one row per node: surviving in-degree + assigned level
     # (null until the node is peeled; deg==0 & level null = the CURRENT
     # level's sources).

@@ -88,29 +88,3 @@ def merge_upsert(
         for c in data_cols
     ]
     return keep.select(*keys, *picked)
-
-
-def merge_upsert_sql(
-    base_sql: str,
-    changes_sql: str,
-    keys: Sequence[str],
-    cols: Sequence[str],
-    *,
-    op_col: str = "op",
-) -> str:
-    """DuckDB oracle replaying :func:`merge_upsert` (assumes a valid
-    changes batch — the guard paths raise rather than return rows, so
-    they never reach a comparison)."""
-    keys_csv = ", ".join(keys)
-    on = " AND ".join(f"b.{k} IS NOT DISTINCT FROM c.{k}" for k in keys)
-    key_out = ", ".join(f"coalesce(b.{k}, c.{k}) AS {k}" for k in keys)
-    col_out = ", ".join(
-        f"CASE WHEN c.{op_col} = 'upsert' THEN c.{c} ELSE b.{c} END AS {c}"
-        for c in cols
-    )
-    return f"""
-WITH b AS ({base_sql}), c AS ({changes_sql})
-SELECT {key_out}, {col_out}
-FROM b FULL OUTER JOIN c ON {on}
-WHERE c.{op_col} IS NULL OR c.{op_col} <> 'delete'
-"""

@@ -44,7 +44,7 @@ from polars_grouper_spark.plans.parallelism import local_result
 
 from ..functions.hashing import portable_hash64, portable_hash64_py, portable_hash64_sql
 from ..plans.iteration import truncate_lineage
-from ..plans.tiering import resolve_max_local_edges
+from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 # Driver-side hash draws (walk-steps) the local tier will do.  Each draw
 # is one md5 (~2 µs), so the worst case is a few seconds of driver time
@@ -112,17 +112,6 @@ def _local_adjacency(pdf, weight: bool = False):
 def _walks_frame(spark, rows):
     """(walk_id, step, node) rows -> DataFrame with the distributed schema."""
     return local_result(spark, rows, "walk_id string, step int, node string")
-
-
-def _collect_for_local(edges: DataFrame, guard: int):
-    """Tier probe: checkpoint + count the cleaned edge frame; collect it
-    when it fits.  Returns (pandas frame | None, checkpointed edges) —
-    on fallback the distributed loop reuses the checkpoint (the probe's
-    materialization is E-sized, never wasted)."""
-    edges = truncate_lineage(edges)
-    if edges.count() <= guard:
-        return edges.toPandas(), edges
-    return None, edges
 
 
 def _uniform_walks_local(
@@ -295,7 +284,7 @@ def random_walks(
     (``portable_hash64_py``) instead of ``walk_length`` sequential
     shuffle-join jobs.  Declines for ``portable=False`` (the local
     mirror is md5-only) and for DataFrame ``starts`` (unbounded start
-    set); on fallback the distributed loop reuses the probe's
+    set); on fallback the distributed loop reuses the gate's
     checkpointed edge frame.
 
     >>> edges = spark.createDataFrame(
@@ -326,7 +315,7 @@ def random_walks(
 
     guard = resolve_max_local_edges(df.sparkSession, max_local_edges)
     if guard and portable and not isinstance(starts, DataFrame):
-        pdf, edges = _collect_for_local(edges, guard)
+        edges, pdf = tier_gate(edges, guard, materialize=False)
         if pdf is not None and _local_draws(
             pdf, walk_length, walks_per_node, starts, max_walks
         ) <= _LOCAL_DRAW_BUDGET:
@@ -478,7 +467,7 @@ def weighted_random_walks(
 
     guard = resolve_max_local_edges(df.sparkSession, max_local_edges)
     if guard and portable and not isinstance(starts, DataFrame):
-        pdf, edges = _collect_for_local(edges, guard)
+        edges, pdf = tier_gate(edges, guard, materialize=False)
         if pdf is not None and _local_draws(
             pdf, walk_length, walks_per_node, starts, max_walks
         ) <= _LOCAL_DRAW_BUDGET:
@@ -643,7 +632,7 @@ def node2vec_walks(
 
     guard = resolve_max_local_edges(df.sparkSession, max_local_edges)
     if guard and portable and not isinstance(starts, DataFrame):
-        pdf, edges = _collect_for_local(edges, guard)
+        adj, pdf = tier_gate(edges, guard)
         if pdf is not None:
             # the α weighting is O(deg) per draw — scale eligibility by
             # the average out-degree so the driver work stays budgeted
@@ -654,8 +643,9 @@ def node2vec_walks(
                     df.sparkSession, pdf, walk_length, walks_per_node, seed,
                     starts, max_walks, a_ret, a_stay, a_expl,
                 )
-
-    adj = truncate_lineage(edges)
+        edges = adj
+    else:
+        adj = truncate_lineage(edges)
     # Edge-existence probe table for the prev -> x test.
     exist = adj.select(F.col("cur").alias("pe"), F.col("nbr").alias("xe"))
 

@@ -32,21 +32,22 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # ``spark.read.parquet(path)`` pays ~85 ms of driver-side work (file
 # listing + footer/schema read + relation analysis) before any job runs
 # — a fixed cost charged to EVERY query that touches a table.  Caching
-# the unresolved DataFrame handle per (SparkContext, path) removes the
-# repeat cost exactly like registering temp views once per session
+# the unresolved DataFrame handle per (session, path) removes the repeat
+# cost exactly like registering temp views once per session
 # (``register_views``) would; it caches NO data and NO results — each
-# action still scans parquet.  Keyed by applicationId so a recycled
-# session re-reads footers (schema changes across sessions are honored);
-# only the newest session's handles are retained.
-_HANDLE_CACHE: dict[str, dict[str, DataFrame]] = {}
+# action still scans parquet.  Keyed by the session OBJECT, not the
+# applicationId: ``spark.newSession()`` shares the application, and a
+# handle is bound to the session that read it (its conf, e.g.
+# ``spark.polars_grouper.maxLocalEdges``, governs every operator run on
+# it).  Only the newest session's handles are retained.
+_HANDLE_CACHE: "tuple[SparkSession | None, dict[str, DataFrame]]" = (None, {})
 
 
 def _cached_handle(spark: SparkSession, path: str):
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _HANDLE_CACHE:
-        _HANDLE_CACHE.clear()
-        _HANDLE_CACHE[app_id] = {}
-    return _HANDLE_CACHE[app_id], path
+    global _HANDLE_CACHE
+    if _HANDLE_CACHE[0] is not spark:
+        _HANDLE_CACHE = (spark, {})
+    return _HANDLE_CACHE[1], path
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:

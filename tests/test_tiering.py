@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from polars_grouper_spark.plans.tiering import (
     DEFAULT_MAX_LOCAL_EDGES,
@@ -53,7 +54,8 @@ def test_resolve_rejects_garbage(conf_guard):
 
 
 def _instrument(monkeypatch):
-    """Record every DataFrame.count / DataFrame.toPandas call.
+    """Record every DataFrame.count call and every frame
+    DataFrame.toPandas returns.
 
     Patches the CONCRETE class (Spark 4's ``classic.dataframe.DataFrame``
     overrides both methods, so patching the abstract ``pyspark.sql
@@ -64,7 +66,7 @@ def _instrument(monkeypatch):
     except ImportError:  # older pyspark: one concrete class
         ConcreteDF = DataFrame
     counts: list[int] = []
-    collects: list[int] = []
+    collects: list = []
     orig_count = ConcreteDF.count
     orig_topandas = ConcreteDF.toPandas
 
@@ -73,8 +75,9 @@ def _instrument(monkeypatch):
         return orig_count(self)
 
     def topandas(self):
-        collects.append(1)
-        return orig_topandas(self)
+        pdf = orig_topandas(self)
+        collects.append(pdf)
+        return pdf
 
     monkeypatch.setattr(ConcreteDF, "count", count)
     monkeypatch.setattr(ConcreteDF, "toPandas", topandas)
@@ -107,24 +110,234 @@ def test_conf_zero_runs_zero_count_jobs(conf_guard, monkeypatch):
     assert counts == [], "tier probe issued a count job despite conf=0"
 
 
-def test_conf_default_engages_local_tier(conf_guard, monkeypatch):
-    """Unset conf -> built-in 2M default -> tiny graph takes the local
-    tier (one probing count, one Arrow collect), same result."""
-    spark = conf_guard
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("d", "e")], ["from", "to"]
-    )
+_SCHEMAS = {
+    "plain": "from string, to string",
+    "weighted": "from string, to string, weight double",
+    "text": "text string",
+}
+_TINY = {
+    # a triangle plus a pendant edge: every operator has something to do
+    "plain": [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")],
+    "weighted": [
+        ("a", "b", 1.0), ("b", "c", 2.0), ("a", "c", 3.0), ("c", "d", 1.0),
+        ("d", "e", 2.5),
+    ],
+    # acyclic, for topological_levels
+    "dag": [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")],
+    "text": [("low lower lowest",), ("new newer newest",), ("low new",)],
+}
+
+
+def _tiered_operators():
+    """(id, input kind, call(df, guard)) for every gated operator."""
+    from polars_grouper_spark.functions.bpe import bpe_train
+    from polars_grouper_spark.operators.coloring import greedy_coloring
+    from polars_grouper_spark.operators.communities import lpa_communities
     from polars_grouper_spark.operators.connected_components import (
-        components as components_hashed,
+        components,
+        connected_components,
+    )
+    from polars_grouper_spark.operators.densest import densest_subgraph_rounds
+    from polars_grouper_spark.operators.fastrp import fastrp_embedding
+    from polars_grouper_spark.operators.hits import hits
+    from polars_grouper_spark.operators.katz import katz_centrality
+    from polars_grouper_spark.operators.kcore import k_core
+    from polars_grouper_spark.operators.ktruss import k_truss
+    from polars_grouper_spark.operators.matching import greedy_matching
+    from polars_grouper_spark.operators.mis import maximal_independent_set
+    from polars_grouper_spark.operators.mst import minimum_spanning_forest
+    from polars_grouper_spark.operators.neighborhood import hll_ball_size
+    from polars_grouper_spark.operators.scc import (
+        bowtie_decomposition,
+        strongly_connected_components,
+    )
+    from polars_grouper_spark.operators.shortest_path import (
+        calculate_shortest_path,
+    )
+    from polars_grouper_spark.operators.toposort import topological_levels
+    from polars_grouper_spark.operators.walks import (
+        node2vec_walks,
+        random_walks,
+        weighted_random_walks,
     )
 
+    return [
+        ("components", "plain", lambda df, g: components(df, max_local_edges=g)),
+        (
+            "connected_components", "plain",
+            lambda df, g: connected_components(df, max_local_edges=g),
+        ),
+        (
+            "scc", "plain",
+            lambda df, g: strongly_connected_components(df, max_local_edges=g),
+        ),
+        ("bowtie", "plain", lambda df, g: bowtie_decomposition(df, max_local_edges=g)),
+        (
+            "random_walks", "plain",
+            lambda df, g: random_walks(df, walk_length=2, seed=1, max_local_edges=g),
+        ),
+        (
+            "weighted_walks", "weighted",
+            lambda df, g: weighted_random_walks(
+                df, walk_length=2, seed=1, max_local_edges=g
+            ),
+        ),
+        (
+            "node2vec_walks", "plain",
+            lambda df, g: node2vec_walks(
+                df, walk_length=2, p=0.5, q=2.0, seed=1, max_local_edges=g
+            ),
+        ),
+        ("k_core", "plain", lambda df, g: k_core(df, 2, max_local_edges=g)),
+        ("k_truss", "plain", lambda df, g: k_truss(df, 3, max_local_edges=g)),
+        ("hits", "plain", lambda df, g: hits(df, max_local_edges=g)),
+        ("katz", "plain", lambda df, g: katz_centrality(df, max_local_edges=g)),
+        ("mis", "plain", lambda df, g: maximal_independent_set(df, max_local_edges=g)),
+        ("densest", "plain", lambda df, g: densest_subgraph_rounds(df, max_local_edges=g)),
+        ("mst", "weighted", lambda df, g: minimum_spanning_forest(df, max_local_edges=g)),
+        ("coloring", "plain", lambda df, g: greedy_coloring(df, max_local_edges=g)),
+        ("matching", "plain", lambda df, g: greedy_matching(df, max_local_edges=g)),
+        ("lpa", "plain", lambda df, g: lpa_communities(df, max_local_edges=g)),
+        ("hll_ball", "plain", lambda df, g: hll_ball_size(df, max_local_edges=g)),
+        ("fastrp", "plain", lambda df, g: fastrp_embedding(df, dim=4, max_local_edges=g)),
+        ("toposort", "dag", lambda df, g: topological_levels(df, max_local_edges=g)),
+        (
+            "shortest_path", "weighted",
+            lambda df, g: calculate_shortest_path(df, max_local_edges=g),
+        ),
+        (
+            "bpe_train", "text",
+            lambda df, g: bpe_train(df, n_merges=3, max_local_vocab=g),
+        ),
+    ]
+
+
+@pytest.mark.parametrize("size", ["tiny", "empty"])
+@pytest.mark.parametrize(
+    "kind,call", [pytest.param(k, c, id=i) for i, k, c in _tiered_operators()]
+)
+def test_conf_default_engages_local_tier(conf_guard, monkeypatch, kind, call, size):
+    """Unset conf -> built-in default guard -> every gated operator takes
+    its local tier through ``tier_gate``: one Arrow collect, NO count
+    job, and the same rows as the distributed tier (guard 0)."""
+    spark = conf_guard
+    data = _TINY[kind] if size == "tiny" else []
+    df = spark.createDataFrame(data, _SCHEMAS.get(kind, _SCHEMAS["plain"]))
+
+    def rows(out):
+        return sorted(map(tuple, out.collect()))
+
+    want = rows(call(df, 0))
     counts, collects = _instrument(monkeypatch)
-    got = {
-        r["node"]: r["component"] for r in components_hashed(edges).collect()
-    }
-    assert got == _cc_expected()
-    assert len(collects) == 1
-    assert len(counts) == 1
+    got = rows(call(df, None))
+    assert counts == [], "a tier probe issued a count job"
+    assert len(collects) == 1, "the local tier did not engage exactly once"
+    assert got == want
+
+
+def test_tier_gate_single_evaluation(conf_guard, monkeypatch):
+    """The guard decision and the collected rows come from ONE evaluation:
+    on a rand()-filtered (non-deterministic) edge frame the observed row
+    count equals the rows the local tier collected, the output covers
+    exactly their nodes, and no count job runs."""
+    import polars_grouper_spark.plans.tiering as tiering
+    from polars_grouper_spark.operators.connected_components import components
+
+    spark = conf_guard
+    edges = spark.range(400).select(
+        F.concat(F.lit("n"), (F.col("id") % 97).cast("string")).alias("from"),
+        F.concat(F.lit("n"), ((F.col("id") * 7 + 3) % 89).cast("string")).alias("to"),
+    ).where(F.rand() < 0.5)
+
+    observations = []
+    real_observed_count = tiering.observed_count
+
+    def spy_observed_count(df):
+        observed, obs = real_observed_count(df)
+        observations.append(obs)
+        return observed, obs
+
+    monkeypatch.setattr(tiering, "observed_count", spy_observed_count)
+    counts, collected = _instrument(monkeypatch)
+    out = {r["node"] for r in components(edges).collect()}
+
+    assert len(observations) == 1 and len(collected) == 1
+    pdf = collected[0]
+    assert observations[0].get["n"] == len(pdf)
+    assert out == set(pdf["u"]) | set(pdf["v"])
+    assert counts == []
+
+
+def test_no_raw_count_or_collect_in_tiered_modules():
+    """Structural check: driver-local tiers go through ``tier_gate`` only.
+    No operator module (nor ``functions/bpe.py``) may call ``.toPandas()``
+    or compare a ``.count()`` against a local-tier guard — the two-job
+    count-then-collect form evaluates its input twice."""
+    import ast
+    import pathlib
+    import re
+
+    import polars_grouper_spark
+
+    pkg = pathlib.Path(polars_grouper_spark.__file__).parent
+    files = sorted((pkg / "operators").glob("*.py")) + [pkg / "functions" / "bpe.py"]
+    guard_name = re.compile(r"max_local|guard|mle")
+
+    def calls(node, attr):
+        return any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr
+            and not n.args
+            for n in ast.walk(node)
+        )
+
+    def names_guard(node):
+        return any(
+            (isinstance(n, ast.Name) and guard_name.search(n.id))
+            or (isinstance(n, ast.Attribute) and guard_name.search(n.attr))
+            for n in ast.walk(node)
+        )
+
+    offenders = []
+    for path in files:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                if node.func.attr == "toPandas":
+                    offenders.append(f"{path.name}:{node.lineno} toPandas()")
+            if isinstance(node, ast.Compare):
+                sides = [node.left, *node.comparators]
+                if any(calls(x, "count") for x in sides) and any(
+                    names_guard(x) for x in sides
+                ):
+                    offenders.append(f"{path.name}:{node.lineno} count() vs guard")
+    assert files and offenders == []
+
+
+def test_reader_handles_bound_per_session(conf_guard, monkeypatch):
+    """``spark.newSession()`` shares the applicationId; its table handles
+    must still be bound to IT, so operators on them read ITS conf."""
+    import os
+
+    from polars_grouper_spark.operators.connected_components import components
+    from polars_grouper_spark.sources.tables import DEFAULT_SF_DIR, load_table
+
+    if not os.path.exists(f"{DEFAULT_SF_DIR}/supplier.parquet"):
+        pytest.skip("testdata not generated")
+    spark = conf_guard
+    s2 = spark.newSession()
+    assert load_table(spark, "supplier").sparkSession is spark
+    sup = load_table(s2, "supplier")
+    assert sup.sparkSession is s2
+    s2.conf.set(MAX_LOCAL_EDGES_CONF, "0")
+    edges = sup.select(
+        F.concat(F.lit("S"), F.col("s_suppkey").cast("string")).alias("from"),
+        F.concat(F.lit("N"), F.col("s_nationkey").cast("string")).alias("to"),
+    )
+    counts, collects = _instrument(monkeypatch)
+    assert components(edges).count() > 0
+    assert collects == [], "local tier engaged despite the session's conf=0"
 
 
 @pytest.mark.slow

@@ -366,7 +366,7 @@ def test_local_tier_declines_dataframe_starts(spark):
 
 
 def test_walks_conf_zero_never_probes(spark, monkeypatch):
-    # session kill switch: the probe/collect helper must never run
+    # session kill switch: the tier gate must never run
     # (the distributed build's own eager adj checkpoint still does)
     from polars_grouper_spark.operators import walks as walks_mod
     from polars_grouper_spark.plans.tiering import MAX_LOCAL_EDGES_CONF
@@ -374,7 +374,7 @@ def test_walks_conf_zero_never_probes(spark, monkeypatch):
     def boom(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("tier probe ran with the conf set to 0")
 
-    monkeypatch.setattr(walks_mod, "_collect_for_local", boom)
+    monkeypatch.setattr(walks_mod, "tier_gate", boom)
     e = _rand_graph(spark)
     spark.conf.set(MAX_LOCAL_EDGES_CONF, "0")
     try:
