@@ -190,7 +190,6 @@ def minhash_signatures(
     text_col: str = "text",
     num_hashes: int = 32,
     shingle_n: int = 3,
-    portable: bool = True,
 ) -> DataFrame:
     """MinHash signatures → (id, perm, minhash) — ``num_hashes`` rows/doc.
 
@@ -201,7 +200,7 @@ def minhash_signatures(
     remains reproducible in the SQL oracle.  minhash_i = min over the
     doc's distinct shingles; the aggregation is map-side combinable.
     """
-    wide = _minhash_wide(df, id_col, text_col, num_hashes, shingle_n, portable)
+    wide = _minhash_wide(df, id_col, text_col, num_hashes, shingle_n)
     pairs = ", ".join(f"{i}, m{i}" for i in range(num_hashes))
     return wide.selectExpr(
         "id", f"stack({num_hashes}, {pairs}) AS (perm, minhash)"
@@ -214,7 +213,6 @@ def _minhash_wide(
     text_col: str,
     num_hashes: int,
     shingle_n: int,
-    portable: bool,
 ) -> DataFrame:
     """Wide MinHash layout → (id, m0..m{num_hashes-1}) — one row per doc.
 
@@ -228,9 +226,12 @@ def _minhash_wide(
     row per doc; the long format, where needed, is a free ``stack``
     over this frame.  Values are bit-identical (same min over the same
     H_i = (h1 + i*h2) mod 2^60 multiset)."""
-    assert num_hashes <= 64, "num_hashes > 64 risks 64-bit overflow in the hash mix"
+    if num_hashes > 64:
+        raise ValueError(
+            f"num_hashes > 64 risks 64-bit overflow in the hash mix, got {num_hashes}"
+        )
     sh = _shingle_table(df, id_col, text_col, shingle_n)
-    h1, h2 = hash_pair64(F.col("shingle"), portable=portable)
+    h1, h2 = hash_pair64(F.col("shingle"))
     hashed = sh.select("id", h1.alias("h1"), h2.alias("h2"))
     return hashed.groupBy("id").agg(
         *[
@@ -280,7 +281,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    portable: bool = True,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs → (id_a, id_b, est_jaccard).
 
@@ -289,16 +289,17 @@ def minhash_lsh_pairs(
     estimated Jaccard = fraction of agreeing minhashes, filtered at
     ``threshold``.  Every join is equality-partitioned; no cross join.
     """
-    assert num_hashes % bands == 0, "num_hashes must divide evenly into bands"
+    if num_hashes % bands:
+        raise ValueError(
+            f"num_hashes must divide evenly into bands, got {num_hashes} and {bands}"
+        )
     rows_per_band = num_hashes // bands
     # Checkpoint: the signature frame feeds band hashing AND both sides of
     # the verification join — uncached it would recompute the shingle+hash
     # pipeline three times.  Wide layout: one row per doc, so the band
     # signatures are a stack (no groupBy(id, band) shuffle) and the
     # verification is a row-wise column comparison (no ×num_hashes join).
-    wide = truncate_lineage(
-        _minhash_wide(df, id_col, text_col, num_hashes, shingle_n, portable)
-    )
+    wide = truncate_lineage(_minhash_wide(df, id_col, text_col, num_hashes, shingle_n))
     band_sig = _band_signatures_wide(wide, num_hashes, rows_per_band)
     cand = (
         band_sig.alias("x")
@@ -328,7 +329,6 @@ def simhash(
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = SIMHASH_BITS,
-    portable: bool = True,
 ) -> DataFrame:
     """Per-document SimHash → (id, simhash long).
 
@@ -342,7 +342,7 @@ def simhash(
         F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("tok")
     )
     tok = tok.groupBy("id", "tok").agg(F.count(F.lit(1)).alias("w"))
-    tok = tok.select("id", "w", portable_hash64(F.col("tok"), portable=portable).alias("h"))
+    tok = tok.select("id", "w", portable_hash64(F.col("tok")).alias("h"))
     bit = tok.select(
         "id",
         "w",
@@ -374,7 +374,6 @@ def simhash_pairs(
     text_col: str = "text",
     bits: int = SIMHASH_BITS,
     max_hamming: int = 3,
-    portable: bool = True,
 ) -> DataFrame:
     """SimHash near-duplicate pairs → (id_a, id_b, hamming).
 
@@ -382,7 +381,7 @@ def simhash_pairs(
     least one of k+1 bit-chunks → equality join per chunk, then exact
     hamming via bit_count(xor).
     """
-    sh = simhash(df, id_col, text_col, bits, portable)
+    sh = simhash(df, id_col, text_col, bits)
     n_chunks = max_hamming + 1
     chunk_bits = bits // n_chunks
     chunks = sh.select(
@@ -529,7 +528,6 @@ def ngram_contamination(
     text_col: str = "text",
     *,
     n: int = 8,
-    portable: bool = True,
 ) -> DataFrame:
     """Train/test n-gram contamination check ->
     ``(id, n_ngrams, n_contaminated, contamination_ratio)`` per TEST doc.
@@ -546,11 +544,11 @@ def ngram_contamination(
     """
     tr = (
         _shingle_table(train, id_col, text_col, n)
-        .select(portable_hash64("shingle", portable=portable).alias("g"))
+        .select(portable_hash64("shingle").alias("g"))
         .distinct()
     )
     te = _shingle_table(test, id_col, text_col, n).select(
-        "id", portable_hash64("shingle", portable=portable).alias("g")
+        "id", portable_hash64("shingle").alias("g")
     )
     hits = te.join(tr, "g", "semi").groupBy("id").agg(
         F.count(F.lit(1)).alias("n_contaminated")
@@ -576,7 +574,6 @@ def dedup_against_corpus(
     bands: int = 8,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    portable: bool = True,
     source: DataFrame = None,
     batch_pred=None,
 ) -> DataFrame:
@@ -610,7 +607,10 @@ def dedup_against_corpus(
     value-identical to two separate passes.  Rows where the predicate is
     NULL belong to neither side (exactly as if the caller had filtered).
     """
-    assert num_hashes % bands == 0, "num_hashes must divide evenly into bands"
+    if num_hashes % bands:
+        raise ValueError(
+            f"num_hashes must divide evenly into bands, got {num_hashes} and {bands}"
+        )
     rows_per_band = num_hashes // bands
     if source is not None:
         if batch_pred is None or batch is not None or corpus is not None:
@@ -635,16 +635,16 @@ def dedup_against_corpus(
 
     if source is not None:
         sig_all = truncate_lineage(
-            _minhash_wide(source, id_col, text_col, num_hashes, shingle_n, portable)
+            _minhash_wide(source, id_col, text_col, num_hashes, shingle_n)
         )
         sig_b = sig_all.where(batch_pred(F.col("id")))
         sig_c = sig_all.where(~batch_pred(F.col("id")))
     else:
         sig_b = truncate_lineage(
-            _minhash_wide(batch, id_col, text_col, num_hashes, shingle_n, portable)
+            _minhash_wide(batch, id_col, text_col, num_hashes, shingle_n)
         )
         sig_c = truncate_lineage(
-            _minhash_wide(corpus, id_col, text_col, num_hashes, shingle_n, portable)
+            _minhash_wide(corpus, id_col, text_col, num_hashes, shingle_n)
         )
     bands_b = _band_signatures_wide(sig_b, num_hashes, rows_per_band)
     bands_c = _band_signatures_wide(sig_c, num_hashes, rows_per_band)
@@ -954,7 +954,6 @@ def dup_spans(
     *,
     window: int = 40,
     stride: int = 10,
-    portable: bool = True,
 ) -> DataFrame:
     """Cross-document duplicated-SPAN measurement — the distributable
     approximation of suffix-array exact-substring dedup (Lee et al.
@@ -1003,7 +1002,7 @@ def dup_spans(
                     f" p -> substring(_txt, p, {window}))"
                 )
             ).alias("_win"),
-        ).select("id", portable_hash64(F.col("_win"), portable=portable).alias("h"))
+        ).select("id", portable_hash64(F.col("_win")).alias("h"))
     )
     shared = (
         wins.groupBy("h")
@@ -1073,7 +1072,6 @@ def group_minhash_similarity(
     text_col: str = "text",
     num_hashes: int = 32,
     shingle_n: int = 3,
-    portable: bool = True,
 ) -> DataFrame:
     """Corpus-level similarity between GROUPS of documents (sources,
     domains, snapshots, languages) -> ``(group_a, group_b,
@@ -1094,9 +1092,12 @@ def group_minhash_similarity(
     shingle scan.  The pair join is all-pairs over GROUPS (g²·H rows);
     for g beyond ~10³, band the group signatures through
     :func:`minhash_lsh_pairs`'s LSH instead of enumerating pairs."""
-    assert num_hashes <= 64, "num_hashes > 64 risks 64-bit overflow in the hash mix"
+    if num_hashes > 64:
+        raise ValueError(
+            f"num_hashes > 64 risks 64-bit overflow in the hash mix, got {num_hashes}"
+        )
     sh = _shingle_table(df, group_col, text_col, shingle_n)
-    h1, h2 = hash_pair64(F.col("shingle"), portable=portable)
+    h1, h2 = hash_pair64(F.col("shingle"))
     hashed = (
         sh.select("id", h1.alias("h1"), h2.alias("h2"))
         .select(
@@ -1179,7 +1180,6 @@ def winnow_fingerprints(
     *,
     k: int = 8,
     w: int = 4,
-    portable: bool = True,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken 2003,
     the MOSS algorithm) -> ``(doc_id, n_fingerprints, fp_xor)``: hash
@@ -1214,9 +1214,7 @@ def winnow_fingerprints(
     ).select(
         "doc",
         "pos",
-        portable_hash64(
-            F.substring(F.col("_t"), F.col("pos"), k), portable=portable
-        ).alias("h"),
+        portable_hash64(F.substring(F.col("_t"), F.col("pos"), k)).alias("h"),
     )
     win = (
         Window.partitionBy("doc")

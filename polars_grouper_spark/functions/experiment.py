@@ -32,7 +32,6 @@ def assign_variant(
     salt: str = "exp",
     *,
     n_variants: int = 2,
-    portable: bool = True,
 ) -> Column:
     """Stable unit-of-randomization assignment -> variant int in
     ``[0, n_variants)``.  Hash-based, so a user keeps one variant across
@@ -41,9 +40,7 @@ def assign_variant(
     if n_variants < 2:
         raise ValueError(f"n_variants must be >= 2, got {n_variants}")
     c = F.col(user_col) if isinstance(user_col, str) else user_col
-    h = portable_hash64(
-        F.concat(F.lit(salt + "|"), c.cast("string")), portable=portable
-    )
+    h = portable_hash64(F.concat(F.lit(salt + "|"), c.cast("string")))
     return F.pmod(h, F.lit(n_variants)).cast("int")
 
 
@@ -53,7 +50,6 @@ def ab_test(
     conversion_col: Column,
     salt: str = "exp",
     *,
-    portable: bool = True,
     decimals: int = 6,
 ) -> DataFrame:
     """Two-variant conversion experiment -> ONE row ``(n_a, conv_a,
@@ -67,9 +63,7 @@ def ab_test(
         df.where(F.col(user_col).isNotNull())
         .groupBy(F.col(user_col).alias("_u"))
         .agg(F.max(conversion_col.cast("int")).alias("_conv"))
-        .select(
-            assign_variant("_u", salt, portable=portable).alias("_v"), "_conv"
-        )
+        .select(assign_variant("_u", salt).alias("_v"), "_conv")
     )
     per_variant = per_user.groupBy("_v").agg(
         F.count(F.lit(1)).alias("n"), F.sum("_conv").alias("conv")
@@ -783,7 +777,6 @@ def median_of_means(
     n_buckets: int = 32,
     quant: int = 100,
     salt: str = "mom",
-    portable: bool = True,
 ) -> DataFrame:
     """Median-of-means robust mean -> ONE row ``(n, n_buckets, mom)``:
     hash rows into ``n_buckets`` groups, average each, take the median
@@ -800,10 +793,7 @@ def median_of_means(
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     if quant < 1:
         raise ValueError(f"quant must be >= 1, got {quant}")
-    h = portable_hash64(
-        F.concat(F.lit(salt + "|"), F.col(id_col).cast("string")),
-        portable=portable,
-    )
+    h = portable_hash64(F.concat(F.lit(salt + "|"), F.col(id_col).cast("string")))
     src = df.where(
         F.col(value_col).isNotNull() & F.col(id_col).isNotNull()
     ).select(

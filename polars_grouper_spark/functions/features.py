@@ -230,7 +230,6 @@ def feature_hashing(
     text_col: str,
     *,
     n_features: int = 1024,
-    portable: bool = True,
 ) -> DataFrame:
     """The hashing trick (Weinberger et al. 2009): map each token to one
     of ``n_features`` buckets by hash, with a second hash bit choosing a
@@ -261,7 +260,7 @@ def feature_hashing(
         F.col(id_col).alias("id"),
         F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
     )
-    h1, h2 = hash_pair64("tok", portable=portable)
+    h1, h2 = hash_pair64("tok")
     return (
         base.select(
             "id",

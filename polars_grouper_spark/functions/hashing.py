@@ -9,10 +9,10 @@ taking the first 15 hex digits (60 bits, always a non-negative long).
 Spark side:   ``conv(substr(md5(x), 1, 15), 16, 10) :: long``
 DuckDB side:  ``CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)``
 
-md5 is ~3x slower than xxhash64 but still JVM-side, vectorized, and far
-from the bottleneck next to the shuffles these operators do.  Operators
-accept ``portable=False`` to switch to ``xxhash64`` when oracle parity is
-not needed (pure-Spark production runs).
+md5 is slower than xxhash64 but still JVM-side, vectorized, and far
+from the bottleneck next to the shuffles these operators do; it is the
+only hash, so every operator stays replayable by the oracle and by the
+driver-side mirror :func:`portable_hash64_py`.
 """
 
 from __future__ import annotations
@@ -25,20 +25,17 @@ HASH_SPACE = 1 << 60
 
 
 def portable_hash64_py(s: str) -> int:
-    """Driver-side Python mirror of :func:`portable_hash64` (portable
-    form) — bit-identical, so guarded local solves of iterative graph
+    """Driver-side Python mirror of :func:`portable_hash64` — bit-identical, so guarded local solves of iterative graph
     operators reproduce the distributed path's hash priorities exactly."""
     import hashlib
 
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:HASH_HEX_DIGITS], 16)
 
 
-def portable_hash64(col: Column | str, *, portable: bool = True) -> Column:
+def portable_hash64(col: Column | str) -> Column:
     """60-bit non-negative hash of a string column, reproducible in SQL."""
     c = F.col(col) if isinstance(col, str) else col
-    if portable:
-        return F.conv(F.substring(F.md5(c), 1, HASH_HEX_DIGITS), 16, 10).cast("long")
-    return F.pmod(F.xxhash64(c), F.lit(HASH_SPACE))
+    return F.conv(F.substring(F.md5(c), 1, HASH_HEX_DIGITS), 16, 10).cast("long")
 
 
 def portable_hash64_sql(expr: str) -> str:
@@ -46,7 +43,7 @@ def portable_hash64_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, {HASH_HEX_DIGITS})) AS BIGINT)"
 
 
-def hash_pair64(col: Column | str, *, portable: bool = True) -> tuple[Column, Column]:
+def hash_pair64(col: Column | str) -> tuple[Column, Column]:
     """Two independent-ish hashes from ONE md5: (60-bit h1, 56-bit h2).
 
     Used by MinHash's linear-combination scheme  H_i = (h1 + i*h2) % 2^60
@@ -56,13 +53,10 @@ def hash_pair64(col: Column | str, *, portable: bool = True) -> tuple[Column, Co
     comfortable margin (verified: i=127 actually overflows under ANSI).
     """
     c = F.col(col) if isinstance(col, str) else col
-    if portable:
-        hx = F.md5(c)
-        h1 = F.conv(F.substring(hx, 1, 15), 16, 10).cast("long")
-        h2 = F.conv(F.substring(hx, 17, 14), 16, 10).cast("long")
-        return h1, h2
-    h = F.xxhash64(c)
-    return F.pmod(h, F.lit(HASH_SPACE)), F.pmod(F.xxhash64(h), F.lit(1 << 56))
+    hx = F.md5(c)
+    h1 = F.conv(F.substring(hx, 1, 15), 16, 10).cast("long")
+    h2 = F.conv(F.substring(hx, 17, 14), 16, 10).cast("long")
+    return h1, h2
 
 
 def hash_pair64_sql(expr: str) -> tuple[str, str]:

@@ -27,7 +27,6 @@ def profile_table(
     cols: "list[str]",
     *,
     b: int = 12,
-    portable: bool = True,
 ) -> DataFrame:
     """One row per column ->
     ``(column, n_rows, n_nulls, null_rate, approx_distinct, min_str,
@@ -62,7 +61,7 @@ def profile_table(
         ).alias("cv")
     ).select(F.col("cv.col").alias("col"), F.col("cv.v").alias("v"))
     rest_bits = _HASH_BITS - b
-    h = portable_hash64(F.col("v"), portable=portable)
+    h = portable_hash64(F.col("v"))
     bucket = F.shiftright(h, rest_bits).cast("int")
     rest = F.pmod(h, F.lit(1 << rest_bits))
     bitlen = F.length(F.conv(rest.cast("string"), 10, 2))

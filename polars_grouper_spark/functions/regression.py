@@ -489,7 +489,6 @@ def ransac_line(
     n_candidates: int = 16,
     eps: float = 1.0,
     salt: str = "ransac",
-    portable: bool = True,
 ) -> DataFrame:
     """Deterministic RANSAC line fit -> ONE row ``(cand_id, slope,
     intercept, n_inliers, n_total, inlier_frac)`` — the robust fit OLS
@@ -521,8 +520,7 @@ def ransac_line(
         F.col(y_col).cast("double").alias("y"),
         F.col(id_col).cast("string").alias("id"),
     )
-    h = portable_hash64(F.concat(F.lit(salt + "|"), F.col("id")),
-                        portable=portable)
+    h = portable_hash64(F.concat(F.lit(salt + "|"), F.col("id")))
     sample = (
         src.select("x", "y", "id", h.alias("_h"))
         .orderBy("_h", "id")

@@ -26,10 +26,8 @@ from .hashing import portable_hash64, portable_hash64_sql
 N_BUCKETS = 10_000
 
 
-def _bucket(id_col: str, salt: str, *, portable: bool = True) -> Column:
-    h = portable_hash64(
-        F.concat(F.lit(salt + "|"), F.col(id_col).cast("string")), portable=portable
-    )
+def _bucket(id_col: str, salt: str) -> Column:
+    h = portable_hash64(F.concat(F.lit(salt + "|"), F.col(id_col).cast("string")))
     return F.pmod(h, F.lit(N_BUCKETS))
 
 
@@ -43,8 +41,6 @@ def deterministic_split(
     id_col: str = "doc_id",
     weights: "dict[str, float] | None" = None,
     salt: str = "split",
-    *,
-    portable: bool = True,
 ) -> DataFrame:
     """Assign each row a split label -> ``(*df.columns, bucket, split)``.
 
@@ -63,7 +59,7 @@ def deterministic_split(
         lo = hi
     last = F.lit(labels[-1][0])
     split = last if expr is None else expr.otherwise(last)
-    out = df.select("*", _bucket(id_col, salt, portable=portable).alias("bucket"))
+    out = df.select("*", _bucket(id_col, salt).alias("bucket"))
     return out.select("*", split.alias("split"))
 
 
@@ -90,7 +86,6 @@ def stratified_sample(
     salt: str = "sample",
     *,
     default_fraction: float = 0.0,
-    portable: bool = True,
 ) -> DataFrame:
     """Deterministic per-stratum Bernoulli sample (``sampleBy`` without the
     RNG): keep a row iff its salted hash bucket falls under its stratum's
@@ -104,7 +99,7 @@ def stratified_sample(
     # Double comparison, NOT an int cast of frac*N: Spark's int cast
     # truncates while DuckDB's rounds, so 0.15*10000 = 1499.999... would
     # disagree.  IEEE double compare is identical in both engines.
-    b = _bucket(id_col, salt, portable=portable)
+    b = _bucket(id_col, salt)
     return df.where(b.cast("double") < frac * N_BUCKETS)
 
 
@@ -132,7 +127,6 @@ def token_budget_mix(
     salt: str = "mix",
     *,
     default_budget: float = 0.0,
-    portable: bool = True,
 ) -> DataFrame:
     """Domain/language mixing to a per-group token budget — the sampling
     step of LLM data curation (The Pile / Llama data mixes): group ``g``
@@ -167,7 +161,7 @@ def token_budget_mix(
         else budget.otherwise(F.lit(float(default_budget)))
     )
     frac = F.least(F.lit(1.0), budget / F.col("_tok_total").cast("double"))
-    b = _bucket(id_col, salt, portable=portable)
+    b = _bucket(id_col, salt)
     return (
         df.join(F.broadcast(tot), group_col)
         .where(b.cast("double") < frac * N_BUCKETS)
@@ -201,8 +195,6 @@ def weighted_sample_topk(
     id_col: str = "doc_id",
     group_col: "str | None" = None,
     salt: str = "wsample",
-    *,
-    portable: bool = True,
 ) -> DataFrame:
     """Deterministic weight-biased sample of ``k`` rows (per group):
     row priority is ``hash(salt|id) / weight`` and the ``k`` LOWEST
@@ -220,10 +212,7 @@ def weighted_sample_topk(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    h = portable_hash64(
-        F.concat(F.lit(salt + "|"), F.col(id_col).cast("string")),
-        portable=portable,
-    )
+    h = portable_hash64(F.concat(F.lit(salt + "|"), F.col(id_col).cast("string")))
     w = F.col(weight_col).cast("double")
     pri = h.cast("double") / w
     base = df.where(F.col(weight_col).isNotNull() & (w > 0)).withColumn(
@@ -265,7 +254,6 @@ def balanced_sample(
     salt: str = "balance",
     *,
     per_class: "int | None" = None,
-    portable: bool = True,
 ) -> DataFrame:
     """Deterministic class-balanced downsample -> the input rows with
     every class cut to the SAME size: ``per_class`` rows per class, or
@@ -286,10 +274,7 @@ def balanced_sample(
     :func:`stratified_sample` to an approximate target first, then
     exact-trim here (two-stage sampling), keeping the ranked volume
     near the final size."""
-    h = portable_hash64(
-        F.concat(F.lit(salt + "|"), F.col(id_col).cast("string")),
-        portable=portable,
-    )
+    h = portable_hash64(F.concat(F.lit(salt + "|"), F.col(id_col).cast("string")))
     base = df.where(F.col(class_col).isNotNull())
     w_rank = Window.partitionBy(class_col).orderBy(h, F.col(id_col))
     ranked = base.select("*", F.row_number().over(w_rank).alias("_rn"))
@@ -351,8 +336,6 @@ def rendezvous_assign(
     id_col: str,
     shards: "Sequence[str]",
     salt: str = "rdv",
-    *,
-    portable: bool = True,
 ) -> DataFrame:
     """Rendezvous (highest-random-weight) sharding -> ``(id, shard)``:
     each row goes to the shard whose ``hash(salt|shard|id)`` is
@@ -378,10 +361,7 @@ def rendezvous_assign(
     n = len(shards)
     c = F.col(id_col)
     packed = [
-        portable_hash64(
-            F.concat(F.lit(f"{salt}|{s}|"), c.cast("string")),
-            portable=portable,
-        )
+        portable_hash64(F.concat(F.lit(f"{salt}|{s}|"), c.cast("string")))
         * n
         + F.lit(i)
         for i, s in enumerate(shards)
@@ -519,8 +499,6 @@ def mixture_waterfill(
     weight_col: str,
     id_col: str = "doc_id",
     salt: str = "mixture",
-    *,
-    portable: bool = True,
 ) -> DataFrame:
     """Plan (and realize) the LARGEST deterministic subsample whose group
     composition matches ``targets`` exactly — proportional data mixing,
@@ -574,7 +552,7 @@ def mixture_waterfill(
         ).alias("_rate"),
         (F.col("_S") * F.col("_share")).alias("_planned"),
     )
-    b = _bucket(id_col, salt, portable=portable)
+    b = _bucket(id_col, salt)
     kept = (
         df.join(F.broadcast(rated.select(group_col, "_rate")), group_col)
         .where(b.cast("double") < F.col("_rate") * N_BUCKETS)
@@ -656,8 +634,6 @@ def dsir_weights(
     n_buckets: int = 4096,
     bigrams: bool = True,
     salt: str = "dsir",
-    *,
-    portable: bool = True,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, arXiv:2302.03169) ->
     one row per doc ``(id_col, n_feats, dsir_logw)``.
@@ -701,9 +677,7 @@ def dsir_weights(
         feats_arr = F.concat(arr, bi)
     else:
         feats_arr = arr
-    h = portable_hash64(
-        F.concat(F.lit(salt + "|"), F.col("ft")), portable=portable
-    )
+    h = portable_hash64(F.concat(F.lit(salt + "|"), F.col("ft")))
     base = (
         df.select(idc.alias("id"), target.alias("is_t"), feats_arr.alias("fa"))
         .select("id", "is_t", F.explode("fa").alias("ft"))

@@ -40,16 +40,14 @@ def _alpha(m: int) -> float:
     return {16: 0.673, 32: 0.697, 64: 0.709}[m]
 
 
-def hll_registers(
-    df: DataFrame, col: Column | str, b: int = 12, *, portable: bool = True
-) -> DataFrame:
+def hll_registers(df: DataFrame, col: Column | str, b: int = 12) -> DataFrame:
     """The mergeable state: ``(bucket int, max_rho int)`` for non-empty
     registers.  Union two sketches by ``groupBy(bucket).max(max_rho)``."""
     if not 4 <= b <= 18:
         raise ValueError(f"b must be in [4, 18], got {b}")
     c = F.col(col) if isinstance(col, str) else col
     rest_bits = _HASH_BITS - b
-    h = portable_hash64(c.cast("string"), portable=portable)
+    h = portable_hash64(c.cast("string"))
     # Exact integer bit arithmetic — no double division (a 60-bit long
     # rounds in double and can cross a bucket boundary).
     bucket = F.shiftright(h, rest_bits).cast("int")
@@ -84,20 +82,16 @@ def hll_estimate(regs: DataFrame, b: int = 12) -> DataFrame:
     return agg.select(F.round(est, 4).alias("estimate"))
 
 
-def hll_distinct(
-    df: DataFrame, col: Column | str, b: int = 12, *, portable: bool = True
-) -> DataFrame:
+def hll_distinct(df: DataFrame, col: Column | str, b: int = 12) -> DataFrame:
     """HyperLogLog distinct-count estimate -> one row ``(estimate double)``
     (rounded to 4 decimals; relative error ~ 1.04/sqrt(2^b), ~1.6% at
     the default b=12)."""
-    return hll_estimate(hll_registers(df, col, b, portable=portable), b)
+    return hll_estimate(hll_registers(df, col, b), b)
 
 
 def hll_union_distinct(
     frames: "list[tuple[DataFrame, Column | str]]",
     b: int = 12,
-    *,
-    portable: bool = True,
 ) -> DataFrame:
     """Distinct count of the UNION of several columns without ever
     materializing the union: build one register sketch per input, merge
@@ -109,7 +103,7 @@ def hll_union_distinct(
         raise ValueError("hll_union_distinct needs at least one (df, col)")
     merged = None
     for df, col in frames:
-        regs = hll_registers(df, col, b, portable=portable)
+        regs = hll_registers(df, col, b)
         merged = regs if merged is None else merged.unionAll(regs)
     merged = merged.groupBy("bucket").agg(F.max("max_rho").alias("max_rho"))
     return hll_estimate(merged, b)
@@ -159,7 +153,6 @@ def cms_counts(
     *,
     width_bits: int = 12,
     depth: int = 4,
-    portable: bool = True,
 ) -> DataFrame:
     """Count-min sketch state (Cormode & Muthukrishnan 2005) ->
     ``(row int, bucket int, cnt long)``: ``depth`` independent hash rows,
@@ -178,10 +171,7 @@ def cms_counts(
     keyed = df.where(c.isNotNull()).select(
         c.cast("string").alias("v"), rows
     )
-    h = portable_hash64(
-        F.concat(F.col("row").cast("string"), F.lit("|"), F.col("v")),
-        portable=portable,
-    )
+    h = portable_hash64(F.concat(F.col("row").cast("string"), F.lit("|"), F.col("v")))
     return (
         keyed.select("row", F.pmod(h, F.lit(w)).alias("bucket"))
         .groupBy("row", "bucket")
@@ -196,7 +186,6 @@ def cms_estimate(
     *,
     width_bits: int = 12,
     depth: int = 4,
-    portable: bool = True,
 ) -> DataFrame:
     """Point-query the sketch for each item -> ``(item, est_count)``:
     the min over the sketch's depth rows (a deterministic overestimate of
@@ -230,7 +219,6 @@ def cms_estimate(
     )
     h = portable_hash64(
         F.concat(F.col("row").cast("string"), F.lit("|"), F.col("item")),
-        portable=portable,
     )
     probes = probes.select("item", "row", F.pmod(h, F.lit(w)).alias("bucket"))
     cell = F.col("cnt").isNotNull()  # full-join rows that ARE sketch cells
@@ -335,7 +323,7 @@ def cms_inner_product(
     itself joins sketch cells — metadata, not data.
 
     Both sketches must come from :func:`cms_counts` with the SAME
-    ``width_bits``/``depth``/``portable``; a depth mismatch is detected
+    ``width_bits``/``depth``; a depth mismatch is detected
     from the state (per-side ``max(row)`` falls out of the same
     aggregation) and raises at collection time — same lazy zero-extra-
     scan guard contract as :func:`cms_estimate`.  Guaranteed
@@ -529,8 +517,6 @@ def hll_distinct_by(
     key: Column | str,
     col: Column | str,
     b: int = 12,
-    *,
-    portable: bool = True,
 ) -> DataFrame:
     """Per-group HyperLogLog estimates -> ``(key, estimate double)``:
     the same register layout and estimator as :func:`hll_distinct`, with
@@ -545,7 +531,7 @@ def hll_distinct_by(
     c = F.col(col) if isinstance(col, str) else col
     m = 1 << b
     rest_bits = _HASH_BITS - b
-    h = portable_hash64(c.cast("string"), portable=portable)
+    h = portable_hash64(c.cast("string"))
     bucket = F.shiftright(h, rest_bits).cast("int")
     rest = F.pmod(h, F.lit(1 << rest_bits))
     bitlen = F.length(F.conv(rest.cast("string"), 10, 2))
@@ -610,8 +596,6 @@ def hll_cube(
     keys: "list[str]",
     col: Column | str,
     b: int = 12,
-    *,
-    portable: bool = True,
 ) -> DataFrame:
     """Distinct-count estimates for EVERY subset of ``keys`` (the full
     cube) -> ``(*keys, estimate)`` with NULL in rolled-up dimensions —
@@ -633,7 +617,7 @@ def hll_cube(
     c = F.col(col) if isinstance(col, str) else col
     m = 1 << b
     rest_bits = _HASH_BITS - b
-    h = portable_hash64(c.cast("string"), portable=portable)
+    h = portable_hash64(c.cast("string"))
     bucket = F.shiftright(h, rest_bits).cast("int")
     rest = F.pmod(h, F.lit(1 << rest_bits))
     bitlen = F.length(F.conv(rest.cast("string"), 10, 2))
@@ -742,7 +726,6 @@ def bloom_bits(
     *,
     m_bits: int = 18,
     k: int = 4,
-    portable: bool = True,
 ) -> DataFrame:
     """Bloom filter state (Bloom 1970) -> ``(pos int)`` — the DISTINCT set
     positions of a ``2^m_bits``-bit filter with ``k`` hash functions
@@ -760,10 +743,7 @@ def bloom_bits(
     m = 1 << m_bits
     hashes = F.explode(F.array(*[F.lit(i) for i in range(k)])).alias("i")
     keyed = df.where(c.isNotNull()).select(c.cast("string").alias("v"), hashes)
-    h = portable_hash64(
-        F.concat(F.col("i").cast("string"), F.lit("|"), F.col("v")),
-        portable=portable,
-    )
+    h = portable_hash64(F.concat(F.col("i").cast("string"), F.lit("|"), F.col("v")))
     return keyed.select(F.pmod(h, F.lit(m)).cast("int").alias("pos")).distinct()
 
 
@@ -774,7 +754,6 @@ def bloom_contains(
     *,
     m_bits: int = 18,
     k: int = 4,
-    portable: bool = True,
 ) -> DataFrame:
     """Probe a Bloom filter -> ``(item, maybe_present)``: true iff ALL
     ``k`` positions of the item are set (never a false negative; false
@@ -793,10 +772,7 @@ def bloom_contains(
     probes = items.select(c.cast("string").alias("item")).distinct().select(
         "item", hashes
     )
-    h = portable_hash64(
-        F.concat(F.col("i").cast("string"), F.lit("|"), F.col("item")),
-        portable=portable,
-    )
+    h = portable_hash64(F.concat(F.col("i").cast("string"), F.lit("|"), F.col("item")))
     probes = probes.select("item", F.pmod(h, F.lit(m)).cast("int").alias("pos"))
     hit = bits.withColumn("_set", F.lit(1))
     res = (
@@ -965,8 +941,6 @@ def hll_intersect(
     df_b: DataFrame,
     col_b: "Column | str",
     b: int = 12,
-    *,
-    portable: bool = True,
 ) -> DataFrame:
     """Set-overlap estimate from sketches alone -> ONE row ``(est_a,
     est_b, est_union, est_intersect)`` via inclusion-exclusion:
@@ -980,8 +954,8 @@ def hll_intersect(
     HLL limitation; a theta sketch would bound it, at the cost of a
     sampled value set).  Components round to 4 decimals first, then
     the difference — deterministic on both engines."""
-    ra = hll_registers(df_a, col_a, b, portable=portable)
-    rb = hll_registers(df_b, col_b, b, portable=portable)
+    ra = hll_registers(df_a, col_a, b)
+    rb = hll_registers(df_b, col_b, b)
     ru = ra.unionAll(rb).groupBy("bucket").agg(
         F.max("max_rho").alias("max_rho")
     )

@@ -124,7 +124,6 @@ def fastrp_embedding(
     sparsity: int = 3,
     weights: "tuple[int, int]" = (1, 1),
     directed: bool = False,
-    portable: bool = True,
     max_broadcast_nodes: int = 2_000_000,
     max_local_edges: int | None = None,
 ) -> DataFrame:
@@ -146,8 +145,7 @@ def fastrp_embedding(
     ``max_local_edges``: the repo's standard two-tier guard
     (``plans.tiering``) — a deduplicated edge set within it runs the
     integer recursion driver-local (bit-exact: integer sums have no
-    order sensitivity; only for ``portable=True``, whose hash has a
-    Python mirror), larger graphs take the distributed joins.
+    order sensitivity), larger graphs take the distributed joins.
     """
     if dim < 1:
         raise ValueError(f"dim must be >= 1, got {dim}")
@@ -177,7 +175,7 @@ def fastrp_embedding(
     # exact only while every partial sum stays under 2^53.  Values are
     # bounded by |lvl2| <= E^2, so E <= 2^26 keeps E^2 <= 2^52 with a
     # 2x margin; above that the distributed integer path runs instead.
-    mle = min(mle, 1 << 26) if portable else 0
+    mle = min(mle, 1 << 26)
     half, pdf = tier_gate(half, mle if directed else mle // 2)
     if pdf is not None:
         import numpy as np
@@ -221,9 +219,7 @@ def fastrp_embedding(
     # |V|·dim hashes; inlining them on edge rows was measured 3× the
     # whole lvl1 pass at avg degree ~40.
     def _r(node_col, i: int):
-        h = portable_hash64(
-            F.concat(node_col, F.lit(f"#{i}")), portable=portable
-        )
+        h = portable_hash64(F.concat(node_col, F.lit(f"#{i}")))
         draw = F.pmod(h, F.lit(2 * sparsity))
         return (
             F.when(draw == 0, F.lit(1))

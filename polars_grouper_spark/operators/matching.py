@@ -95,7 +95,6 @@ def greedy_matching(
     *,
     seed: int = 0,
     max_rounds: int = 60,
-    portable: bool = True,
     max_local_edges: int | None = None,
 ) -> DataFrame:
     """Maximal matching -> ``(a, b)`` canonical matched pairs over the
@@ -116,8 +115,7 @@ def greedy_matching(
 
     Two-tier (MIS posture): dedup stays distributed; under
     ``max_local_edges`` the round loop runs driver-local with identical
-    priorities (``portable=False`` has no Python hash mirror, so it
-    always takes the distributed loop).
+    priorities.
     """
     s = F.col(src).cast("string")
     d = F.col(dst).cast("string")
@@ -129,9 +127,7 @@ def greedy_matching(
     # Spark-side priority column (the local kernel computes identical
     # priorities via the Python hash mirror).
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    cleaned, pdf = tier_gate(
-        cleaned, max_local_edges if portable else 0, materialize=False
-    )
+    cleaned, pdf = tier_gate(cleaned, max_local_edges, materialize=False)
     if pdf is not None:
         pdf = pdf.drop_duplicates(ignore_index=True)
         return local_result(
@@ -154,8 +150,7 @@ def greedy_matching(
                     portable_hash64(
                         F.concat(
                             F.col("a"), F.lit("|"), F.col("b"), F.lit(f"|{seed}")
-                        ),
-                        portable=portable,
+                        )
                     ),
                 ),
                 F.lit("|"),

@@ -83,7 +83,6 @@ def maximal_independent_set(
     *,
     seed: int = 0,
     max_rounds: int = 60,
-    portable: bool = True,
     max_local_edges: int | None = None,
 ) -> DataFrame:
     """MIS membership -> ``(node, in_mis)`` for every node of the cleaned
@@ -99,9 +98,7 @@ def maximal_independent_set(
     edge reduction is the distributed scale work; when the deduplicated
     graph fits ``max_local_edges`` the O(log n)-round Luby loop runs
     driver-local with BIT-IDENTICAL hash priorities instead of paying
-    ~2 joins + an aggregation of shuffle stages per round.  Only the
-    portable-hash form has a Python mirror, so ``portable=False``
-    always takes the distributed loop.
+    ~2 joins + an aggregation of shuffle stages per round.
     """
     s = F.col(src).cast("string")
     d = F.col(dst).cast("string")
@@ -110,7 +107,7 @@ def maximal_independent_set(
         df.where(s.isNotNull() & d.isNotNull() & (s != d))
         .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
         .distinct(),
-        max_local_edges if portable else 0,
+        max_local_edges,
     )
     if pdf is not None:
         flags = _mis_local(
@@ -122,9 +119,7 @@ def maximal_independent_set(
     sym = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    pri = lambda c: portable_hash64(  # noqa: E731
-        F.concat(c, F.lit(f"|{seed}")), portable=portable
-    )
+    pri = lambda c: portable_hash64(F.concat(c, F.lit(f"|{seed}")))  # noqa: E731
     active = truncate_lineage(
         edges.select(F.col("a").alias("node"))
         .union(edges.select(F.col("b").alias("node")))

@@ -46,7 +46,6 @@ def negative_samples(
     k: int = 3,
     bucket_factor: int = 16,
     seed: str = "neg",
-    portable: bool = True,
 ) -> DataFrame:
     """Per-node deterministic non-edges -> ``(node, negative)`` (up to
     ``k`` rows per node; fewer after edge/self/duplicate rejection).
@@ -89,9 +88,7 @@ def negative_samples(
     B = max(n_nodes // bucket_factor, 1)
 
     def h(c, tag):
-        return portable_hash64(
-            F.concat(F.lit(f"{seed}|{tag}|"), c), portable=portable
-        )
+        return portable_hash64(F.concat(F.lit(f"{seed}|{tag}|"), c))
 
     buckets = nodes.select(
         F.col("n").alias("cand"), F.pmod(h(F.col("n"), "b"), F.lit(B)).alias("bkt")

@@ -112,7 +112,6 @@ def hll_ball_size(
     radius: int = 2,
     b: int = 8,
     directed: bool = False,
-    portable: bool = True,
     max_local_edges: int | None = None,
 ) -> DataFrame:
     """Per-node HLL estimate of ``|{u : dist(node, u) <= radius}|``
@@ -142,7 +141,7 @@ def hll_ball_size(
     max_local_edges = resolve_max_local_edges(df.sparkSession, max_local_edges)
     base, pdf = tier_gate(
         base,
-        (max_local_edges if directed else max_local_edges // 2) if portable else 0,
+        max_local_edges if directed else max_local_edges // 2,
         materialize=False,
     )
     if pdf is not None:
@@ -160,7 +159,7 @@ def hll_ball_size(
     nodes = edges.select(F.col("u").alias("node")).union(
         edges.select(F.col("v").alias("node"))
     ).distinct()
-    h = portable_hash64(F.col("node"), portable=portable)
+    h = portable_hash64(F.col("node"))
     rest = F.pmod(h, F.lit(1 << rest_bits))
     bitlen = F.length(F.conv(rest.cast("string"), 10, 2))
     rho = F.when(rest == 0, F.lit(rest_bits + 1)).otherwise(

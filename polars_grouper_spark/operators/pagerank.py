@@ -24,6 +24,8 @@ L1-diff aggregation doubles as the action that materializes the round.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -40,17 +42,15 @@ def page_rank_nodes(
     damping_factor: float = 0.85,
     max_iterations: int = 100,
     convergence_threshold: float = 1e-6,
-    broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Table variant: ``(node string, score double)`` for every interned node.
 
-    ``broadcast_ranks``: when the rank state (O(V) rows) fits in executor
-    memory, broadcasting it into the per-iteration edges⋈ranks join removes
-    the edge-side shuffle entirely — each round becomes a broadcast hash
-    join over the cached edge blocks plus one map-side-combined sum.
-    ``None`` (default) decides from the exact node count (≤ 5M → broadcast);
-    at cluster scale with V beyond that, the shuffle join partitioned on the
-    node key is the right plan and is kept.
+    When the rank state (O(V) rows) fits in executor memory — decided from
+    the exact node count (≤ 5M) — it is broadcast into the per-iteration
+    edges⋈ranks join, which removes the edge-side shuffle entirely: each
+    round becomes a broadcast hash join over the cached edge blocks plus
+    one map-side-combined sum.  At cluster scale with V beyond that, the
+    shuffle join partitioned on the node key is the right plan and is kept.
     """
     edges = df.select(
         F.col(from_col).cast("string").alias("src"),
@@ -88,11 +88,9 @@ def page_rank_nodes(
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("score"))
 
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= _BROADCAST_NODES_MAX
     return _power_iteration(
         nodes, edges_w, n, damping_factor, max_iterations,
-        convergence_threshold, broadcast_ranks,
+        convergence_threshold, n <= _BROADCAST_NODES_MAX,
     )
 
 
@@ -193,8 +191,6 @@ def page_rank_nodes_bucketed(
     damping_factor: float = 0.85,
     max_iterations: int = 100,
     convergence_threshold: float = 1e-6,
-    table_name: str | None = None,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """:func:`page_rank_nodes` with the weighted pair table persisted as a
     bucketed+sorted table on ``src`` before the loop (``plans.bucketing``).
@@ -207,11 +203,11 @@ def page_rank_nodes_bucketed(
     write), never again, regardless of iteration count.  Identical scores
     to :func:`page_rank_nodes` (same loop, same arithmetic).
 
-    The bucketed table is internal scratch state: ``table_name=None``
-    (default) derives a per-call unique name, so concurrent calls in one
-    session never clobber each other, and the table is dropped before
-    returning (safe — every loop round is eagerly ``localCheckpoint``-ed,
-    so the returned frame's lineage no longer reads the table).
+    The bucketed table is internal scratch state under a per-call unique
+    name, so concurrent calls in one session never clobber each other,
+    and it is dropped before returning (safe — every loop round is
+    eagerly ``localCheckpoint``-ed, so the returned frame's lineage no
+    longer reads the table).
     """
     from polars_grouper_spark.plans.bucketing import bucket_table
 
@@ -243,19 +239,15 @@ def page_rank_nodes_bucketed(
         "dst",
         (F.col("cnt") / F.sum("cnt").over(Window.partitionBy("src"))).alias("w"),
     )
-    if n_buckets is None:
-        # Size buckets to the rank state (the per-round shuffled side):
-        # ~50k nodes per bucket, floored at 4, capped by the session's
-        # shuffle parallelism.  A tiny graph in 32 buckets pays 32 tasks
-        # of file overhead per round AND per write for no parallelism
-        # gain (measured: the one-off bucketed write dominates the bench
-        # query at sf0.1); a 100M-node graph caps at the configured
-        # shuffle width, which a cluster operator sets in thousands.
-        n_buckets = max(4, min(_shuffle_partitions(spark.conf), n // 50_000))
-    if table_name is None:
-        import uuid
-
-        table_name = f"pgs_pr_edges_{uuid.uuid4().hex[:12]}"
+    # Size buckets to the rank state (the per-round shuffled side):
+    # ~50k nodes per bucket, floored at 4, capped by the session's
+    # shuffle parallelism.  A tiny graph in 32 buckets pays 32 tasks
+    # of file overhead per round AND per write for no parallelism
+    # gain (measured: the one-off bucketed write dominates the bench
+    # query at sf0.1); a 100M-node graph caps at the configured
+    # shuffle width, which a cluster operator sets in thousands.
+    n_buckets = max(4, min(_shuffle_partitions(spark.conf), n // 50_000))
+    table_name = f"pgs_pr_edges_{uuid.uuid4().hex[:12]}"
     edges_w = bucket_table(edges_w, table_name, "src", n_buckets=n_buckets, sort=True)
     try:
         return _power_iteration(
@@ -317,7 +309,6 @@ def personalized_page_rank(
     to_col: str = "to",
     damping_factor: float = 0.85,
     max_iterations: int = 20,
-    broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart): the teleport
     mass returns to ``sources`` (uniformly) instead of all nodes —
@@ -376,8 +367,7 @@ def personalized_page_rank(
         .otherwise(F.lit(0.0))
         .alias("score"),
     )
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= _BROADCAST_NODES_MAX
+    broadcast_ranks = n <= _BROADCAST_NODES_MAX
     for i in range(max_iterations):
         rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
         ranks = (
@@ -403,7 +393,6 @@ def weighted_page_rank_nodes(
     damping_factor: float = 0.85,
     max_iterations: int = 100,
     convergence_threshold: float = 1e-6,
-    broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Edge-weighted PageRank -> ``(node string, score double)``: the
     transition probability u→v is ``weight(u,v) / Σ_w weight(u,w)``
@@ -456,11 +445,9 @@ def weighted_page_rank_nodes(
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("score"))
 
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= _BROADCAST_NODES_MAX
     return _power_iteration(
         nodes, edges_w, n, damping_factor, max_iterations,
-        convergence_threshold, broadcast_ranks,
+        convergence_threshold, n <= _BROADCAST_NODES_MAX,
     )
 
 

@@ -264,7 +264,6 @@ def random_walks(
     walk_length: int = 4,
     walks_per_node: int = 1,
     seed: int = 0,
-    portable: bool = True,
     starts: "DataFrame | list | None" = None,
     max_walks: "int | None" = None,
     max_local_edges: int | None = None,
@@ -274,17 +273,15 @@ def random_walks(
     One walk per (start node, replica) pair; ``walk_id`` is
     ``"<start>#<replica>"``; ``step`` runs 0..``walk_length`` while the
     walk survives (a walk standing at a node with no out-neighbors ends
-    early).  ``portable=False`` swaps the md5-derived hash for xxhash64
-    (faster; forfeits cross-engine replay).
+    early).
 
     Guarded local tier (``max_local_edges``, resolved through
     ``plans.tiering``): when the distinct edge set fits the guard AND
     the draw count (walks × steps) fits the driver budget, the whole
     walk runs driver-local with bit-identical md5 draws
     (``portable_hash64_py``) instead of ``walk_length`` sequential
-    shuffle-join jobs.  Declines for ``portable=False`` (the local
-    mirror is md5-only) and for DataFrame ``starts`` (unbounded start
-    set); on fallback the distributed loop reuses the gate's
+    shuffle-join jobs.  Declines for DataFrame ``starts`` (unbounded
+    start set); on fallback the distributed loop reuses the gate's
     checkpointed edge frame.
 
     >>> edges = spark.createDataFrame(
@@ -314,7 +311,7 @@ def random_walks(
     )
 
     guard = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if guard and portable and not isinstance(starts, DataFrame):
+    if guard and not isinstance(starts, DataFrame):
         edges, pdf = tier_gate(edges, guard, materialize=False)
         if pdf is not None and _local_draws(
             pdf, walk_length, walks_per_node, starts, max_walks
@@ -356,7 +353,7 @@ def random_walks(
             F.col("f.cur"),
             F.lit(f"|{step}|{seed}"),
         )
-        choice = F.pmod(portable_hash64(choice_key, portable=portable), F.col("a.deg"))
+        choice = F.pmod(portable_hash64(choice_key), F.col("a.deg"))
         frontier = truncate_lineage(
             f.join(
                 a,
@@ -424,7 +421,6 @@ def weighted_random_walks(
     walk_length: int = 4,
     walks_per_node: int = 1,
     seed: int = 0,
-    portable: bool = True,
     starts: "DataFrame | list | None" = None,
     max_walks: "int | None" = None,
     max_local_edges: int | None = None,
@@ -466,7 +462,7 @@ def weighted_random_walks(
     )
 
     guard = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if guard and portable and not isinstance(starts, DataFrame):
+    if guard and not isinstance(starts, DataFrame):
         edges, pdf = tier_gate(edges, guard, materialize=False)
         if pdf is not None and _local_draws(
             pdf, walk_length, walks_per_node, starts, max_walks
@@ -506,7 +502,7 @@ def weighted_random_walks(
             F.col("f.cur"),
             F.lit(f"|{step}|{seed}"),
         )
-        draw = F.pmod(portable_hash64(choice_key, portable=portable), F.col("a.total"))
+        draw = F.pmod(portable_hash64(choice_key), F.col("a.total"))
         frontier = truncate_lineage(
             f.join(
                 a,
@@ -584,7 +580,6 @@ def node2vec_walks(
     walk_length: int = 4,
     walks_per_node: int = 1,
     seed: int = 0,
-    portable: bool = True,
     starts: "DataFrame | list | None" = None,
     max_walks: "int | None" = None,
     max_local_edges: int | None = None,
@@ -631,7 +626,7 @@ def node2vec_walks(
     )
 
     guard = resolve_max_local_edges(df.sparkSession, max_local_edges)
-    if guard and portable and not isinstance(starts, DataFrame):
+    if guard and not isinstance(starts, DataFrame):
         adj, pdf = tier_gate(edges, guard)
         if pdf is not None:
             # the α weighting is O(deg) per draw — scale eligibility by
@@ -697,8 +692,7 @@ def node2vec_walks(
                     F.col("walk_id"), F.lit("|"),
                     F.col("prev"), F.lit("|"), F.col("cur"),
                     F.lit(f"|{step}|{seed}"),
-                ),
-                portable=portable,
+                )
             ),
             F.col("total"),
         )

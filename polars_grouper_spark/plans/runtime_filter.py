@@ -44,7 +44,6 @@ def bloom_filtered_join(
     m_bits: int = 18,
     k: int = 4,
     how: str = "inner",
-    portable: bool = True,
 ) -> DataFrame:
     """``fact ⋈ dim`` with a Bloom pre-filter on the fact side ->
     exactly the rows of the plain join (the Bloom pass never drops a
@@ -60,7 +59,7 @@ def bloom_filtered_join(
             "use inner/left_semi/right"
         )
     m = 1 << m_bits
-    bits = bloom_bits(dim, dim_key, m_bits=m_bits, k=k, portable=portable)
+    bits = bloom_bits(dim, dim_key, m_bits=m_bits, k=k)
     # Pack the set positions into 64-bit words (word index -> OR of its
     # set bits) and test the k probe positions with a PURE EXPRESSION on
     # the fact side.  The previous form — k successive broadcast LEFT
@@ -89,7 +88,6 @@ def bloom_filtered_join(
         for i in range(k):
             h = portable_hash64(
                 F.concat(F.lit(str(i) + "|"), F.col(fact_key).cast("string")),
-                portable=portable,
             )
             cols.append(F.pmod(h, F.lit(m)).cast("int"))
         return cols

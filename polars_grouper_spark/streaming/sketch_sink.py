@@ -39,21 +39,18 @@ class StreamingHll:
         est = sk.estimate(spark)   # one-row (estimate double) DataFrame
     """
 
-    def __init__(self, col: str, b: int = 12, *, portable: bool = True):
+    def __init__(self, col: str, b: int = 12):
         if not 4 <= b <= 18:
             raise ValueError(f"b must be in [4, 18], got {b}")
         self.col = col
         self.b = b
-        self.portable = portable
         self.registers: "dict[int, int]" = {}
         self.batches = 0
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook: aggregate the microbatch to registers
         (distributed), fold into the running table (≤ 2^b rows)."""
-        regs = hll_registers(
-            batch_df, self.col, self.b, portable=self.portable
-        ).collect()
+        regs = hll_registers(batch_df, self.col, self.b).collect()
         for r in regs:
             bkt, rho = r["bucket"], r["max_rho"]
             if rho > self.registers.get(bkt, 0):

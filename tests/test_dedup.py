@@ -1,3 +1,5 @@
+import pytest
+
 from polars_grouper_spark.functions import dedup as dd
 
 
@@ -365,7 +367,7 @@ def test_band_signatures_wide_matches_reference_md5(spark):
     # md5(string_agg(minhash, ',' ORDER BY perm)) per band.
     import hashlib
 
-    wide = dd._minhash_wide(_docs(spark), "doc_id", "text", 8, 3, True)
+    wide = dd._minhash_wide(_docs(spark), "doc_id", "text", 8, 3)
     rows = {r["id"]: r for r in wide.collect()}
     got = {
         (r["id"], r["band"]): r["bsig"]
@@ -379,7 +381,25 @@ def test_band_signatures_wide_matches_reference_md5(spark):
 
 def test_minhash_signatures_is_stack_of_wide(spark):
     wide = {
-        r["id"]: r for r in dd._minhash_wide(_docs(spark), "doc_id", "text", 8, 3, True).collect()
+        r["id"]: r for r in dd._minhash_wide(_docs(spark), "doc_id", "text", 8, 3).collect()
     }
     for r in dd.minhash_signatures(_docs(spark), num_hashes=8).collect():
         assert r["minhash"] == wide[r["id"]][f"m{r['perm']}"]
+
+
+@pytest.mark.parametrize(
+    "call, match",
+    [
+        (lambda d: dd.minhash_lsh_pairs(d, num_hashes=30, bands=8), "bands"),
+        (lambda d: dd.minhash_lsh_pairs(d, num_hashes=128, bands=8), "overflow"),
+        (lambda d: dd.dedup_against_corpus(d, d, num_hashes=30, bands=8), "bands"),
+        (lambda d: dd.dedup_against_corpus(d, d, num_hashes=128, bands=8), "overflow"),
+        (lambda d: dd.group_minhash_similarity(d, "doc_id", num_hashes=65), "overflow"),
+    ],
+    ids=["lsh-bands", "lsh-width", "corpus-bands", "corpus-width", "group-width"],
+)
+def test_minhash_input_checks_raise_value_error(spark, call, match):
+    # Plain raises, not asserts: they must survive ``python -O``, where
+    # num_hashes > 64 would silently overflow the h1 + i*h2 hash mix.
+    with pytest.raises(ValueError, match=match):
+        call(_docs(spark))

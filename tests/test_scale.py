@@ -232,7 +232,7 @@ def test_walks_frontier_stays_o_starts_on_big_graph(spark):
     edges = _power_law_edges(spark, 1_000_000, 100_000)
     starts = 20_000
     out = random_walks(
-        edges, walk_length=6, walks_per_node=1, portable=False, max_walks=starts
+        edges, walk_length=6, walks_per_node=1, max_local_edges=0, max_walks=starts
     )
     per_step = {
         int(r["step"]): int(r["n"])
@@ -244,7 +244,7 @@ def test_walks_frontier_stays_o_starts_on_big_graph(spark):
 
     n2v = node2vec_walks(
         edges, p=2.0, q=0.5, walk_length=3, walks_per_node=1,
-        portable=False, max_walks=5_000,
+        max_local_edges=0, max_walks=5_000,
     )
     n2v_steps = {
         int(r["step"]): int(r["n"])
