@@ -529,7 +529,7 @@ def pmi_pairs(
         raise ValueError(f"min_count must be >= 1, got {min_count}")
     # staged feeds unigram AND bigram extraction; uni feeds the total,
     # and both sides of the PMI join — materialize the token arrays once.
-    from polars_grouper_spark.plans.iteration import truncate_lineage
+    from polars_grouper_spark.plans.iteration import observed, truncate_lineage
 
     staged = truncate_lineage(df.select(tokens(F.col(text_col)).alias("_toks")))
     uni = (
@@ -537,8 +537,9 @@ def pmi_pairs(
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
     )
+    uni, obs = observed(uni, total=F.sum("n"))
     uni = truncate_lineage(uni)
-    n_uni = uni.agg(F.sum("n")).collect()[0][0] or 0
+    n_uni = obs.get["total"] or 0
     bi = staged.select(
         F.explode(
             F.zip_with(

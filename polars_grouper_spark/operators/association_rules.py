@@ -57,11 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from polars_grouper_spark.plans.iteration import (
-    fingerprint,
-    observed_count,
-    truncate_lineage,
-)
+from polars_grouper_spark.plans.iteration import fingerprint, observed, truncate_lineage
 from polars_grouper_spark.plans.parallelism import local_result
 from polars_grouper_spark.plans.skew import salted_agg
 from polars_grouper_spark.plans.tiering import resolve_max_local_edges, tier_gate
@@ -134,8 +130,9 @@ def _pattern_labels(assoc_edges: DataFrame, guard: int) -> DataFrame:
         new_labels = (
             labels.union(prop).groupBy("iid").agg(F.min("root").alias("root"))
         )
+        new_labels, obs = observed(new_labels, "iid", "root")
         new_labels = truncate_lineage(new_labels)
-        fp = fingerprint(new_labels, "iid", "root")
+        fp = fingerprint(obs)
         if fp == prev:
             break
         prev = fp
@@ -320,9 +317,7 @@ def graph_association_rules(
     # One shuffle serves both transaction-level needs: the per-transaction
     # sizes (for the max_itemset_size filter) and the distinct-transaction
     # count, observed on the checkpoint job itself (no count job).
-    tx_sizes, n_tx = observed_count(
-        t.groupBy("tx").agg(F.count(F.lit(1)).alias("sz"))
-    )
+    tx_sizes, n_tx = observed(t.groupBy("tx").agg(F.count(F.lit(1)).alias("sz")))
     tx_sizes = truncate_lineage(tx_sizes)
     total_tx = n_tx.get["n"]
     if total_tx == 0:

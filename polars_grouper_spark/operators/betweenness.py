@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 
 from polars_grouper_spark.plans.parallelism import local_result
 
-from polars_grouper_spark.plans.iteration import truncate_lineage
+from polars_grouper_spark.plans.iteration import observed, truncate_lineage
 
 
 def _intern(df: DataFrame, from_col: str, to_col: str, directed: bool):
@@ -86,13 +86,14 @@ def _intern(df: DataFrame, from_col: str, to_col: str, directed: bool):
     # ContextCleaner when the result frame is garbage-collected — repeated
     # calls don't accumulate session-lifetime cache the way an explicit
     # persist() without unpersist() would.
-    nid_map = truncate_lineage(
+    nid_map, obs = observed(
         spark.createDataFrame(
             first_seen.orderBy("seen").rdd.map(lambda r: r[0]).zipWithIndex(),
             schema="node string, nid long",
         )
     )
-    n = nid_map.count()
+    nid_map = truncate_lineage(nid_map)
+    n = obs.get["n"]
     if n == 0:
         return nid_map, None, 0
 

@@ -55,7 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from polars_grouper_spark.plans.iteration import fingerprint, truncate_lineage
+from polars_grouper_spark.plans.iteration import fingerprint, observed, truncate_lineage
 from polars_grouper_spark.plans.tiering import resolve_max_local_edges, tier_gate
 
 _MAX_ROUNDS = 50
@@ -120,9 +120,8 @@ def _cc_assignments(edge_ids: DataFrame, skew_safe: bool = False) -> DataFrame:
     e = edge_ids.where(F.col("u") != F.col("v")).select(
         F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
     )
-    # Lazy checkpoint: the plan is truncated now, materialization happens on
-    # the first action (the round-1 fingerprint below) — one job per round,
-    # not two.
+    # Lazy checkpoint: the plan is truncated now; its blocks are written by
+    # the first job that reads them (round 1's checkpoint below).
     e = truncate_lineage(e, cache=False)
 
     wu = Window.partitionBy("u")
@@ -160,11 +159,10 @@ def _cc_assignments(edge_ids: DataFrame, skew_safe: bool = False) -> DataFrame:
             .where(F.col("u") != F.col("v"))
             .distinct()
         )
-        # Lazy checkpoint + fingerprint: the fingerprint aggregation is the
-        # action that materializes this round's checkpoint blocks.
-        e = truncate_lineage(small, cache=False)
-
-        fp = fingerprint(e, "u", "v")
+        # The fingerprint rides the round's checkpoint job.
+        e, obs = observed(small, "u", "v")
+        e = truncate_lineage(e)
+        fp = fingerprint(obs)
         if fp == prev_fp:
             break
         prev_fp = fp

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from polars_grouper_spark.plans.parallelism import local_result
 
-from ..plans.iteration import truncate_lineage
+from ..plans.iteration import observed, truncate_lineage
 from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
@@ -115,11 +115,10 @@ def densest_subgraph_rounds(
             .groupBy("n")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        deg = truncate_lineage(deg, cache=False)
-        agg = deg.agg(
-            F.count(F.lit(1)).alias("v"), F.sum("deg").alias("two_e")
-        ).collect()[0]
-        v, two_e = int(agg["v"] or 0), int(agg["two_e"] or 0)
+        deg, obs = observed(deg, two_e=F.sum("deg"))
+        deg = truncate_lineage(deg)
+        got = obs.get
+        v, two_e = got["n"], int(got["two_e"] or 0)
         if v == 0:
             break
         stats.append((rnd, v, two_e // 2))

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.iteration import truncate_lineage
+from ..plans.iteration import observed, truncate_lineage
 from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
@@ -117,17 +117,18 @@ def hits(
         if local is not None:
             return local
     edges = truncate_lineage(base.distinct())
-    nodes = truncate_lineage(
+    nodes, obs = observed(
         edges.select(F.col("u").alias("node"))
         .union(edges.select(F.col("v").alias("node")))
         .distinct()
     )
+    nodes = truncate_lineage(nodes)
     # The score state is O(V) rows; when it fits the broadcast budget,
     # shipping it into each join leaves the (checkpointed) O(E) edge side
     # un-shuffled for the whole loop — the same lever as PageRank's
     # broadcast_ranks.  Checkpointed frames carry no size estimate, so
     # AQE cannot make this call on its own.
-    n_nodes = nodes.count()
+    n_nodes = obs.get["n"]
     bcast = (lambda d: F.broadcast(d)) if n_nodes <= 5_000_000 else (lambda d: d)
     # Overflow guard: scores grow like (d_in_max * d_out_max)^iters, and
     # under ANSI mode an overflowing long sum dies mid-aggregation with a

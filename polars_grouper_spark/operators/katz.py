@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from polars_grouper_spark.plans.parallelism import local_result
 
-from ..plans.iteration import truncate_lineage
+from ..plans.iteration import observed, truncate_lineage
 from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
@@ -104,12 +104,13 @@ def katz_centrality(
         return local_result(
             df.sparkSession, rows, "node string, raw long, katz double"
         )
-    nodes = truncate_lineage(
+    nodes, obs = observed(
         edges.select(F.col("u").alias("node"))
         .union(edges.select(F.col("v").alias("node")))
         .distinct()
     )
-    n_nodes = nodes.count()
+    nodes = truncate_lineage(nodes)
+    n_nodes = obs.get["n"]
     bcast = (lambda x: F.broadcast(x)) if n_nodes <= 5_000_000 else (lambda x: x)
     checked = (
         lambda col: F.when(

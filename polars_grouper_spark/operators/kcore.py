@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.iteration import fingerprint, truncate_lineage
+from ..plans.iteration import fingerprint, observed, truncate_lineage
 from ..plans.tiering import resolve_max_local_edges, tier_gate
 from .triangles import _interned_edges
 
@@ -167,12 +167,12 @@ def k_core(
     if pdf is not None:
         return _k_core_local(df.sparkSession, pdf, k, max_iter)
     edges, names = _interned_edges(cleaned, "s", "d")
-    # CC's loop pattern: lazy checkpoint per round, with the one-job
-    # (count, bit_xor) fingerprint as BOTH the materializing action and
-    # the convergence probe — exactly one Spark job per peel round.
-    # Edges are distinct canonical pairs, so XOR cancellation is safe.
-    edges = truncate_lineage(edges, cache=False)
-    prev = fingerprint(edges, "a", "b")
+    # CC's loop pattern: the (count, bit_xor) fingerprint is observed on
+    # each round's eager checkpoint — no separate fingerprint job.  Edges
+    # are distinct canonical pairs, so XOR cancellation is safe.
+    edges, obs = observed(edges, "a", "b")
+    edges = truncate_lineage(edges)
+    prev = fingerprint(obs)
     for _ in range(max_iter):
         deg = _degrees(edges)
         alive = deg.where(F.col("deg") >= k).select("nid")
@@ -181,8 +181,9 @@ def k_core(
             .join(alive.withColumnRenamed("nid", "b"), "b", "semi")
             .select("a", "b")
         )
-        new_edges = truncate_lineage(new_edges, cache=False)
-        cur = fingerprint(new_edges, "a", "b")
+        new_edges, obs = observed(new_edges, "a", "b")
+        new_edges = truncate_lineage(new_edges)
+        cur = fingerprint(obs)
         if cur == prev:
             # fixpoint: every remaining node already has degree >= k
             core = _degrees(edges).select("nid", F.col("deg").alias("core_deg"))

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.iteration import fingerprint, truncate_lineage
+from ..plans.iteration import fingerprint, observed, truncate_lineage
 from ..plans.tiering import resolve_max_local_edges, tier_gate
 from .triangles import _interned_edges
 
@@ -309,8 +309,9 @@ def k_truss(
     if pdf is not None:
         return _k_truss_local(df.sparkSession, pdf, min_support, max_iter)
     edges, names = _interned_edges(cleaned, "s", "d")
-    edges = truncate_lineage(edges, cache=False)
-    prev = fingerprint(edges, "a", "b")
+    edges, obs = observed(edges, "a", "b")
+    edges = truncate_lineage(edges)
+    prev = fingerprint(obs)
     # Triangle-list peel (round-9 optimization, the classic MapReduce
     # k-truss shape — Cohen 2008): a triangle of the residual graph IS a
     # triangle of the original graph all of whose edges survive, so the
@@ -356,8 +357,9 @@ def k_truss(
             "a", "b", F.coalesce("support", F.lit(0)).alias("support")
         )
         new_edges = sup.where(F.col("support") >= min_support).select("a", "b")
-        new_edges = truncate_lineage(new_edges, cache=False)
-        cur = fingerprint(new_edges, "a", "b")
+        new_edges, obs = observed(new_edges, "a", "b")
+        new_edges = truncate_lineage(new_edges)
+        cur = fingerprint(obs)
         if cur != prev and max_local_edges and cur[0] <= max_local_edges:
             # Mid-loop local finish (round-9): once the residual fits the
             # guard, the remaining peel rounds run driver-local in one

@@ -54,13 +54,13 @@ def modularity(
 
     ca = asg.select(F.col("n").alias("a"), F.col("c").alias("ca"))
     cb = asg.select(F.col("n").alias("b"), F.col("c").alias("cb"))
-    from ..plans.iteration import truncate_lineage
+    from ..plans.iteration import observed, truncate_lineage
 
-    # tagged feeds the count, the intra filter and both degree branches
-    # — materialize once (the count doubles as the materializing action).
-    tagged = truncate_lineage(edges.join(ca, "a").join(cb, "b"))
-
-    m = tagged.count()
+    # tagged feeds the intra filter and both degree branches — materialize
+    # once; its row count rides the checkpoint job.
+    tagged, obs = observed(edges.join(ca, "a").join(cb, "b"))
+    tagged = truncate_lineage(tagged)
+    m = obs.get["n"]
     if m == 0:
         return asg.groupBy(F.col("c").alias("community")).agg(
             F.count(F.lit(1)).cast("long").alias("n_nodes"),

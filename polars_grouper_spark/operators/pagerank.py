@@ -18,8 +18,8 @@ Semantics replicated exactly:
 
 Spark-first design: driver-side loop of key-partitioned joins/aggs — the
 edges⋈ranks join shuffles on the node key, the per-target sum is a
-map-side-combinable aggregation.  Lineage is truncated every round; the
-L1-diff aggregation doubles as the action that materializes the round.
+map-side-combinable aggregation.  Lineage is truncated every round; in
+convergence mode the round's L1 diff is observed on its checkpoint job.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ import uuid
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from polars_grouper_spark.plans.iteration import truncate_lineage
+from polars_grouper_spark.plans.iteration import observed, truncate_lineage
 
 
 _BROADCAST_NODES_MAX = 5_000_000  # ~100 MB of (string, double) rows
@@ -74,17 +74,7 @@ def page_rank_nodes(
             (F.col("cnt") / F.sum("cnt").over(Window.partitionBy("src"))).alias("w"),
         )
     )
-    # Node set from the CHECKPOINTED pair table, not the raw edges
-    # (r9-opt): the raw rows are scanned once instead of twice and the
-    # distinct dedups 2·|distinct pairs| rows, not 2·|raw rows| — same
-    # set either way (interning is membership-only, no order semantics).
-    nodes = (
-        edges_w.select(F.col("src").alias("node"))
-        .union(edges_w.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    nodes = truncate_lineage(nodes)
-    n = nodes.count()
+    nodes, n = _node_table(edges_w)
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("score"))
 
@@ -92,6 +82,20 @@ def page_rank_nodes(
         nodes, edges_w, n, damping_factor, max_iterations,
         convergence_threshold, n <= _BROADCAST_NODES_MAX,
     )
+
+
+def _node_table(pairs: DataFrame) -> "tuple[DataFrame, int]":
+    """Checkpointed node set of a ``(src, dst)`` pair table and its size,
+    observed on the checkpoint job.  Built from the CHECKPOINTED pair
+    table, not the raw edges (r9-opt): the raw rows are scanned once and
+    the distinct dedups 2·|distinct pairs| rows, not 2·|raw rows| — same
+    set either way (interning is membership-only, no order semantics)."""
+    nodes, obs = observed(
+        pairs.select(F.col("src").alias("node"))
+        .union(pairs.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    return truncate_lineage(nodes), obs.get["n"]
 
 
 def _power_iteration(
@@ -106,30 +110,25 @@ def _power_iteration(
 ) -> DataFrame:
     """The shared rank loop over a weighted pair table (src, dst, w).
 
-    Dangling-safe iteration without a per-round join back to ``nodes``:
-    union a zero contribution for every node into the SAME aggregation
-    that sums the edge contributions.  Each round is then exactly one
-    shuffle (the map-side-combinable sum on the target node), and no
-    broadcast of the aggregated contributions has to be built.
+    Each round is one plan (:func:`_round`) whose output carries the
+    previous score next to the new one, so convergence mode reads the L1
+    diff ``Σ|score - old|`` from an observation on the round's eager
+    checkpoint — no join back to the previous ranks, no extra job.
     """
     base = (1.0 - damping_factor) / n
     # No checkpoint needed for the initial ranks: ``nodes`` is already
     # checkpointed and the projection on top of it is lineage-flat.
     ranks = nodes.select("node", F.lit(1.0 / n).alias("score"))
-    zeros = nodes.select("node", F.lit(0.0).alias("c"))
     for i in range(max_iterations):
         rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        new_ranks = _round(edges_w, rank_side, zeros, base, damping_factor)
+        new_ranks = _round(edges_w, rank_side, ranks, base, damping_factor)
         if convergence_threshold > 0.0:
-            # Convergence mode: the round MUST materialize (the L1 diff
-            # reads both old and new state), so checkpoint eagerly.
-            new_ranks = truncate_lineage(new_ranks)
-            diff = (
-                new_ranks.alias("n")
-                .join(ranks.alias("o"), "node")
-                .agg(F.sum(F.abs(F.col("n.score") - F.col("o.score"))).alias("d"))
-                .collect()[0]["d"]
+            new_ranks, obs = observed(
+                new_ranks, d=F.sum(F.abs(F.col("score") - F.col("old")))
             )
+            ranks = truncate_lineage(new_ranks)
+            if obs.get["d"] < convergence_threshold:
+                break
         else:
             # Fixed-iteration mode: eager checkpoint per round.  A
             # chained variant (checkpoint every 8th round, one final
@@ -147,31 +146,42 @@ def _power_iteration(
             # round N-1's checkpoint.  ``final_checkpoint=True`` keeps it
             # for callers whose returned lineage must not re-read scratch
             # state dropped right after the loop (the bucketed table).
-            diff = None
             if final_checkpoint or i < max_iterations - 1:
                 new_ranks = truncate_lineage(new_ranks)
-        ranks = new_ranks
-        if diff is not None and diff < convergence_threshold:
-            break
-    return ranks
+            ranks = new_ranks
+    return ranks.select("node", "score")
 
 
 def _round(
     edges_w: DataFrame,
     rank_side: DataFrame,
-    zeros: DataFrame,
+    prev: DataFrame,
     base: float,
     damping_factor: float,
 ) -> DataFrame:
-    """One power-iteration round as a plan (tested directly for Exchange
-    counts in ``tests/test_bucketing.py`` — the bucketed edge side must
-    satisfy the join's required distribution with no shuffle)."""
+    """One power-iteration round as a plan: ``(node, score, old)``.
+
+    ``prev`` (the previous ranks) joins the SAME aggregation that sums the
+    edge contributions as one ``(c = 0.0, old = score)`` row per node: the
+    zero keeps nodes without in-edges in the output (dangling-safe with no
+    join back to the node table, so a round is exactly one shuffle), and
+    ``old`` carries the previous score for the convergence check.  Tested
+    directly for Exchange counts in ``tests/test_bucketing.py`` — the
+    bucketed edge side must satisfy the join's required distribution with
+    no shuffle."""
+    contrib = edges_w.join(rank_side, edges_w["src"] == rank_side["node"]).select(
+        F.col("dst").alias("node"),
+        (F.col("score") * F.col("w")).alias("c"),
+        F.lit(None).cast("double").alias("old"),
+    )
+    carry = prev.select("node", F.lit(0.0).alias("c"), F.col("score").alias("old"))
     return (
-        edges_w.join(rank_side, edges_w["src"] == rank_side["node"])
-        .select(F.col("dst").alias("node"), (F.col("score") * F.col("w")).alias("c"))
-        .unionAll(zeros)
+        contrib.unionAll(carry)
         .groupBy("node")
-        .agg((F.lit(base) + F.lit(damping_factor) * F.sum("c")).alias("score"))
+        .agg(
+            (F.lit(base) + F.lit(damping_factor) * F.sum("c")).alias("score"),
+            F.max("old").alias("old"),
+        )
     )
 
 
@@ -218,19 +228,13 @@ def page_rank_nodes_bucketed(
     ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
 
     # Collapse + checkpoint the pair table first, then intern nodes from
-    # it (r9-opt, same shape as page_rank_nodes): one raw-edge scan
+    # it (same shape as page_rank_nodes): one raw-edge scan
     # total, and the node distinct runs over distinct pairs, not raw
     # multiplicity.
     pair_cnt = truncate_lineage(
         edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt"))
     )
-    nodes = (
-        pair_cnt.select(F.col("src").alias("node"))
-        .union(pair_cnt.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    nodes = truncate_lineage(nodes)
-    n = nodes.count()
+    nodes, n = _node_table(pair_cnt)
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("score"))
 
@@ -340,15 +344,7 @@ def personalized_page_rank(
             (F.col("cnt") / F.sum("cnt").over(Window.partitionBy("src"))).alias("w"),
         )
     )
-    # Node set from the checkpointed pair table (r9-opt): one raw scan,
-    # distinct over distinct pairs — same set, membership-only semantics.
-    nodes = (
-        edges_w.select(F.col("src").alias("node"))
-        .union(edges_w.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    nodes = truncate_lineage(nodes)
-    n = nodes.count()
+    nodes, n = _node_table(edges_w)
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("score"))
 
@@ -433,15 +429,7 @@ def weighted_page_rank_nodes(
             ).alias("w"),
         )
     )
-    # Node set from the checkpointed weighted table (r9-opt): one pass
-    # over the grouped edges instead of two — same set.
-    nodes = (
-        edges_w.select(F.col("src").alias("node"))
-        .union(edges_w.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    nodes = truncate_lineage(nodes)
-    n = nodes.count()
+    nodes, n = _node_table(edges_w)
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("score"))
 

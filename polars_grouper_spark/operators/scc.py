@@ -36,7 +36,7 @@ fixpoints run O(block diameter) rounds; outer rounds are O(log n)
 expected on graphs whose SCC sizes are skewed (each round removes every
 block's pivot SCC and splits the remainder three ways).  Per-round
 state is lineage-truncated via ``localCheckpoint``; convergence is a
-one-job fingerprint (plans/iteration.py).
+fingerprint observed on the round's checkpoint (plans/iteration.py).
 
 Input conventions follow SURVEY.md §1: endpoints cast to string, null
 endpoints drop the edge, parallel edges collapse.  Self-loops are
@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from polars_grouper_spark.plans.parallelism import local_result
 
-from ..plans.iteration import fingerprint, truncate_lineage
+from ..plans.iteration import fingerprint, observed, truncate_lineage
 from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
@@ -264,14 +264,14 @@ def strongly_connected_components(
                 .groupBy(F.col("v").alias("id"))
                 .agg(F.min("fu").alias("fin"))
             )
-            # Lazy checkpoint: the fingerprint below is the round's one job.
-            fstate = truncate_lineage(
+            fstate, obs = observed(
                 fstate.join(msgs, "id", "left").select(
                     "id", "blk", F.least("f", "fin").alias("f")
                 ),
-                cache=False,
+                "id", "f",
             )
-            fp = fingerprint(fstate, "id", "f")
+            fstate = truncate_lineage(fstate)
+            fp = fingerprint(obs)
             if fp == prev:
                 break
             prev = fp
@@ -296,9 +296,9 @@ def strongly_connected_components(
                 )
                 .select(F.col("u").alias("id"), "blk")
             )
-            # Lazy checkpoint: the count below is the round's one job.
-            marked = truncate_lineage(marked.unionAll(new).distinct(), cache=False)
-            n = marked.count()
+            marked, obs = observed(marked.unionAll(new).distinct())
+            marked = truncate_lineage(marked)
+            n = obs.get["n"]
             if n == prev_n:
                 break
             prev_n = n

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from polars_grouper_spark.plans.parallelism import local_result
 
-from polars_grouper_spark.plans.iteration import truncate_lineage
+from polars_grouper_spark.plans.iteration import observed, truncate_lineage
 from polars_grouper_spark.plans.tiering import resolve_max_local_edges, tier_gate
 
 _MAX_ROUNDS = 200
@@ -471,11 +471,11 @@ def calculate_shortest_path(
             .where(F.col("xd").isNull() | (F.col("d") < F.col("xd")))
             .select("s", "n", "d")
         )
-        # Lazy checkpoint: the count below is the action that materializes
-        # it — one job per round, not two — and doubles as the next
-        # round's broadcast-eligibility estimate.
-        improved = truncate_lineage(improved, cache=False)
-        frontier_rows = improved.count()
+        # The frontier size rides the checkpoint job and doubles as the
+        # next round's broadcast-eligibility estimate.
+        improved, obs = observed(improved)
+        improved = truncate_lineage(improved)
+        frontier_rows = obs.get["n"]
         if frontier_rows == 0:
             break
         dist = truncate_lineage(

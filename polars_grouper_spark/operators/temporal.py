@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from polars_grouper_spark.plans.parallelism import local_result
 
 from ..functions.timeutil import epoch_us_ntz
-from ..plans.iteration import truncate_lineage
+from ..plans.iteration import observed, truncate_lineage
 
 _BROADCAST_FRONTIER_ROWS = 1_000_000
 
@@ -113,8 +113,9 @@ def temporal_reachability(
             )
             .select("node", "arr")
         )
-        improved = truncate_lineage(improved, cache=False)
-        frontier_rows = improved.count()
+        improved, obs = observed(improved)
+        improved = truncate_lineage(improved)
+        frontier_rows = obs.get["n"]
         if frontier_rows == 0:
             break
         dist = truncate_lineage(

@@ -15,11 +15,11 @@ each edge contributing its decrement exactly once.  Rounds = DAG depth
 (typically tens), so per-round driver/job overhead dominates a naive
 loop; rounds are therefore chained LAZILY in blocks of ``block``
 (intermediates cached so branch reuse computes once) with a single
-localCheckpoint + count action per block — ~2 Spark jobs per ``block``
-levels instead of ~5 per level.  A cycle means some nodes are never
-peeled (a whole block passes with no progress): the operator RAISES
-rather than returning a partial layering (feed it the
-``scc.condensation`` of a cyclic graph first).
+eager localCheckpoint per block that also observes the unpeeled count —
+one checkpoint per ``block`` levels instead of one per level.  A cycle
+means some nodes are never peeled (a whole block passes with no
+progress): the operator RAISES rather than returning a partial layering
+(feed it the ``scc.condensation`` of a cyclic graph first).
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from polars_grouper_spark.plans.parallelism import local_result
 
-from ..plans.iteration import truncate_lineage
+from ..plans.iteration import observed, truncate_lineage
 from ..plans.tiering import resolve_max_local_edges, tier_gate
 
 
@@ -102,9 +102,9 @@ def topological_levels(
     block the
     per-level state updates chain lazily (each intermediate cached, so
     the two consumers of a level's state — its sources and the updated
-    state — compute it once), then a single lazy localCheckpoint +
-    remaining-count action decides progress/termination and cuts every
-    in-block reference, letting the block's caches unpersist
+    state — compute it once), then a single eager localCheckpoint,
+    whose observed remaining count decides progress/termination, cuts
+    every in-block reference, letting the block's caches unpersist
     immediately.  Each edge decrements its target exactly once (when
     its source is peeled), so the edge set stays static and cached
     instead of being anti-joined down each round.
@@ -133,7 +133,7 @@ def topological_levels(
     indeg = edges.groupBy(F.col("v").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
-    state = truncate_lineage(
+    state, obs = observed(
         edges.select(F.col("u").alias("node"))
         .union(edges.select(F.col("v").alias("node")))
         .distinct()
@@ -144,7 +144,8 @@ def topological_levels(
             F.lit(None).cast("int").alias("level"),
         )
     )
-    n_left = state.count()
+    state = truncate_lineage(state)
+    n_left = obs.get["n"]
     if n_left == 0:
         return local_result(spark, [], "node string, level int")
 
@@ -174,11 +175,12 @@ def topological_levels(
                 "level",
             )
             lvl += 1
-        # ONE action per block: the unpeeled-count triggers the lazy
-        # checkpoint, materializing the chain (through the caches, so
-        # each intermediate computes once) and cutting its lineage.
-        state = truncate_lineage(state, cache=False)
-        n_left = state.where(F.col("level").isNull()).count()
+        # The block's checkpoint materializes the chain (through the
+        # caches, so each intermediate computes once), cuts its lineage
+        # and observes the unpeeled count in the same job.
+        state, obs = observed(state, left=F.count_if(F.col("level").isNull()))
+        state = truncate_lineage(state)
+        n_left = obs.get["left"]
         for c in cached:
             c.unpersist()
         if n_left == 0:

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.iteration import truncate_lineage
+from ..plans.iteration import observed, truncate_lineage
 
 
 def _canonical_edges(df: DataFrame, src: str, dst: str) -> DataFrame:
@@ -472,15 +472,15 @@ def edge_embeddedness(
     the edge set — the same wedge-bounded shape as the triangle
     counter, never an all-pairs neighborhood comparison; degrees attach
     by two broadcast-size joins.  Under ``max_broadcast_edges`` (round-9,
-    the triangle/k-truss pattern; one cheap count of the checkpointed
-    edges) the edge filter broadcasts and runs BEFORE the pair
+    the triangle/k-truss pattern; the edge count is observed on the
+    edge checkpoint) the edge filter broadcasts and runs BEFORE the pair
     aggregation, so the data-sized wedge stream is generated, closed and
     partially aggregated map-side in one stage; above the budget the
     original aggregate-then-join order stands (same shuffle either way,
     and the pre-aggregation keeps its duplicate compression)."""
-    edges = _canonical_edges(df, src, dst)
+    edges, obs = observed(_canonical_edges(df, src, dst))
     edges = truncate_lineage(edges)
-    n_edges = edges.count()
+    n_edges = obs.get["n"]
     bc_small = bool(max_broadcast_edges) and n_edges <= max_broadcast_edges
     bc = F.broadcast if bc_small else (lambda d: d)
     sym = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(

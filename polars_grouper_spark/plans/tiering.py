@@ -28,7 +28,7 @@ from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from polars_grouper_spark.plans.iteration import observed_count, truncate_lineage
+from polars_grouper_spark.plans.iteration import observed, truncate_lineage
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -93,8 +93,8 @@ def tier_gate(
     """
     if guard <= 0:
         return (truncate_lineage(df) if materialize else df), None
-    observed, obs = observed_count(df)
-    frame = truncate_lineage(observed)
+    frame, obs = observed(df)
+    frame = truncate_lineage(frame)
     if obs.get["n"] > guard:
         return frame, None
     return frame, (collect(frame) if collect is not None else frame).toPandas()

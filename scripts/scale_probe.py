@@ -101,19 +101,23 @@ def probe_cc(spark, meter, edges, label: str, skew_safe: bool = False) -> dict:
 
     rounds: list[dict] = []
     real_fp = cc_mod.fingerprint
-    last = {"t": None, "rw": None}
+    last = {"t": None}
 
-    def spy_fp(df, *cols):
-        t0 = time.time()
-        out = real_fp(df, *cols)
+    def spy_fp(*args):
+        # fingerprint only reads the round's observation, so time the
+        # whole round: the interval since the previous fingerprint call
+        # (the first round's since the call started).
+        out = real_fp(*args)
+        now = time.time()
         rd, wr = meter.snapshot()
-        rec = {"fp_sec": round(time.time() - t0, 2), "read_b": rd, "write_b": wr}
+        rec = {"fp_sec": round(now - last["t"], 2), "read_b": rd, "write_b": wr}
+        last["t"] = now
         rounds.append(rec)
         return out
 
     cc_mod.fingerprint = spy_fp
     try:
-        t0 = time.time()
+        t0 = last["t"] = time.time()
         start_rd, start_wr = meter.snapshot()
         res = components(edges, skew_safe=skew_safe)
         n_nodes = res.count()
@@ -129,6 +133,7 @@ def probe_cc(spark, meter, edges, label: str, skew_safe: bool = False) -> dict:
             {
                 "round_read_mb": round((rec["read_b"] - prev_rd) / 1e6, 1),
                 "round_write_mb": round((rec["write_b"] - prev_wr) / 1e6, 1),
+                "fp_sec": rec["fp_sec"],
             }
         )
         prev_rd, prev_wr = rec["read_b"], rec["write_b"]
@@ -202,8 +207,7 @@ def probe_pagerank_bucketed(spark, meter, edges, iters: int = 5) -> dict:
         nodes = bt.select(F.col("src").alias("node")).distinct().localCheckpoint()
         nn = nodes.count()
         ranks = nodes.select("node", F.lit(1.0 / nn).alias("score"))
-        zeros = nodes.select("node", F.lit(0.0).alias("c"))
-        ex = exchange_count(pr_mod._round(bt, ranks, zeros, 0.15 / nn, 0.85))
+        ex = exchange_count(pr_mod._round(bt, ranks, ranks, 0.15 / nn, 0.85))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS probe_pr_round")

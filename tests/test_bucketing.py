@@ -66,15 +66,14 @@ def test_pagerank_round_plan_has_no_edge_side_exchange(spark):
     )
     n = nodes.count()
     ranks = nodes.select("node", F.lit(1.0 / n).alias("score"))
-    zeros = nodes.select("node", F.lit(0.0).alias("c"))
     base = 0.15 / n
 
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         bucketed = bucket_table(edges_w, "b_pr_round", "src", n_buckets=8)
-        plain_round = _round(edges_w, ranks, zeros, base, 0.85)
-        bucketed_round = _round(bucketed, ranks, zeros, base, 0.85)
+        plain_round = _round(edges_w, ranks, ranks, base, 0.85)
+        bucketed_round = _round(bucketed, ranks, ranks, base, 0.85)
 
         plain_ex = exchange_count(plain_round)
         bucketed_ex = exchange_count(bucketed_round)

@@ -128,8 +128,7 @@ def test_bucketed_pagerank_round_plan_at_scale(spark):
         nodes = bt.select(F.col("src").alias("node")).distinct().localCheckpoint()
         n = nodes.count()
         ranks = nodes.select("node", F.lit(1.0 / n).alias("score"))
-        zeros = nodes.select("node", F.lit(0.0).alias("c"))
-        plan = _round(bt, ranks, zeros, 0.15 / n, 0.85)
+        plan = _round(bt, ranks, ranks, 0.15 / n, 0.85)
         assert exchange_count(plan) == 2
         # the round actually runs and conserves non-dangling mass shape
         assert plan.count() > 0

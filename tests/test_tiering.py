@@ -250,14 +250,14 @@ def test_tier_gate_single_evaluation(conf_guard, monkeypatch):
     ).where(F.rand() < 0.5)
 
     observations = []
-    real_observed_count = tiering.observed_count
+    real_observed = tiering.observed
 
-    def spy_observed_count(df):
-        observed, obs = real_observed_count(df)
+    def spy_observed(df, *cols, **aggs):
+        frame, obs = real_observed(df, *cols, **aggs)
         observations.append(obs)
-        return observed, obs
+        return frame, obs
 
-    monkeypatch.setattr(tiering, "observed_count", spy_observed_count)
+    monkeypatch.setattr(tiering, "observed", spy_observed)
     counts, collected = _instrument(monkeypatch)
     out = {r["node"] for r in components(edges).collect()}
 
@@ -312,6 +312,71 @@ def test_no_raw_count_or_collect_in_tiered_modules():
                     names_guard(x) for x in sides
                 ):
                     offenders.append(f"{path.name}:{node.lineno} count() vs guard")
+    assert files and offenders == []
+
+
+def test_no_scalar_read_after_checkpoint():
+    """Structural check: a loop or operator reads a scalar from a frame it
+    checkpoints by observing it on the checkpoint job (``observed`` +
+    ``truncate_lineage`` + ``obs.get`` / ``fingerprint(obs)``).  No
+    statement under the package may call ``.count()``, ``.collect()`` or
+    ``.first()`` on — or pass to ``fingerprint`` — a name bound by
+    ``truncate_lineage(...)`` in the statement just before: that is a
+    second job over rows the checkpoint already passed through."""
+    import ast
+    import pathlib
+
+    import polars_grouper_spark
+
+    pkg = pathlib.Path(polars_grouper_spark.__file__).parent
+    # A grouped top-1 over the checkpoint, not a scalar of it.
+    allowed = {("operators/scc.py", "giant_row = (")}
+
+    def root_name(node):
+        while isinstance(node, (ast.Call, ast.Attribute, ast.Subscript)):
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return node.id if isinstance(node, ast.Name) else None
+
+    def checkpointed(stmt):
+        if isinstance(stmt, ast.Assign) and isinstance(stmt.value, ast.Call):
+            fn = stmt.value.func
+            if getattr(fn, "id", getattr(fn, "attr", None)) == "truncate_lineage":
+                return {t.id for t in stmt.targets if isinstance(t, ast.Name)}
+        return set()
+
+    def reads(stmt, names):
+        for n in ast.walk(stmt):
+            if not isinstance(n, ast.Call):
+                continue
+            if (
+                isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("count", "collect", "first")
+                and not n.args
+                and root_name(n.func.value) in names
+            ):
+                return True
+            if getattr(n.func, "id", None) == "fingerprint" and any(
+                isinstance(a, ast.Name) and a.id in names for a in n.args
+            ):
+                return True
+        return False
+
+    offenders = []
+    files = sorted(pkg.rglob("*.py"))
+    for path in files:
+        rel = path.relative_to(pkg).as_posix()
+        source = path.read_text()
+        lines = source.splitlines()
+        for node in ast.walk(ast.parse(source, filename=str(path))):
+            for field in ("body", "orelse", "finalbody"):
+                stmts = getattr(node, field, None)
+                if not isinstance(stmts, list):
+                    continue
+                for prev, cur in zip(stmts, stmts[1:]):
+                    names = checkpointed(prev)
+                    text = lines[cur.lineno - 1].strip()
+                    if names and reads(cur, names) and (rel, text) not in allowed:
+                        offenders.append(f"{rel}:{cur.lineno} {text}")
     assert files and offenders == []
 
 
